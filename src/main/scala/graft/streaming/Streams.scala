@@ -1,8 +1,10 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructField
 
 /** Structured Streaming twins of the batch time-series operators
   * (SURVEY.md §2.8 — extension beyond the reference surface, which has
@@ -1039,9 +1041,9 @@ object Streams {
   /** Streaming upsert sink — the `foreachBatch` + MERGE maintenance
     * pattern (stream of change rows → continuously-current keyed
     * table): each micro-batch reduces to its latest row per key (ts
-    * then event_id tiebreak — deterministic under replay), then
-    * [[graft.operators.MergeUpsert.upsert]]s into the parquet table at
-    * `tableDir`.
+    * then event_id tiebreak — deterministic under replay) and commits
+    * into the versioned parquet table at `tableDir` as an all-`U`
+    * change log (see [[applyUpsertBatch]]).
     *
     * Exactly-once: foreachBatch is at-least-once (a failed epoch
     * replays with the SAME batchId), so the sink is made idempotent by
@@ -1094,130 +1096,232 @@ object Streams {
             s"skipped at batch $batchId: ${e.getMessage}")
       }
 
-  /** One idempotent micro-batch merge (factored out so specs can drive
-    * replay scenarios directly).
-    *
-    * `snapshotEvery` (r17 verdict #2) picks the version LAYOUT. 1 (the
-    * default, the original behavior): every batch writes a FULL
-    * snapshot directory `v<id>` — simple, but the retained window costs
-    * keepN × table-size, untenable at 100 TB. k > 1: the batch's
-    * latest-per-key reduce — which IS the batch's delta — is written as
-    * a DELTA directory `d<id>`, and only every k-th batch materializes
-    * a full `v<id>` (reconstruct + merge), so the steady-state storage
-    * per batch is O(delta), not O(table). Readers reconstruct any
-    * version by folding ≤ k−1 deltas over the newest snapshot at-or-
-    * before it through ONE [[graft.operators.CdcApply.applyLog]] pass
-    * (the batchId is the fold's seq — unique per key per delta because
-    * each delta is already latest-per-key). Reads are bit-identical to
-    * the full-snapshot layout (MaintenanceSpec pins it); the idempotent
-    * replay, crashed-flip repair, pointer flip, and vacuum invariants
-    * are layout-independent.
+  /** One idempotent upsert micro-batch (factored out so specs can drive
+    * replay scenarios directly). The batch's latest-per-`user_id`
+    * reduce is its delta; folded, it is a change log of `U` records
+    * whose seq is the batchId (unique per key: the delta is already
+    * latest-per-key). Every commit enforces a non-null `user_id` and
+    * the table's exact column names, order and types.
+    * `snapshotEvery` picks the layout (see [[applyTableBatch]]).
     */
   def applyUpsertBatch(batch: DataFrame, batchId: Long, tableDir: String,
-      snapshotEvery: Int = 1): Unit = {
+      snapshotEvery: Int = 1): Unit =
+    applyTableBatch(UpsertTable, batch, batchId, tableDir, snapshotEvery)
+
+  /** Streaming CDC apply — the streaming twin of
+    * [[graft.operators.CdcApply]] and the inverse-of-[[snapshot-diff]]
+    * maintenance loop: an append-only change stream (I/U/D records,
+    * per-key-monotone `seq`, `op`) folds into the same versioned
+    * pointer-flipped table the upsert sink maintains — batch-wise
+    * folding equals whole-log folding because last-writer-wins is
+    * associative over seq-ordered prefixes (StreamingSpec pins
+    * streamed ≡ one-shot). Same exactly-once recipe as [[upsertSink]].
+    * At 100 TB per-batch cost is O(batch + current table) through one
+    * map-side-combinable aggregate — the table never self-joins — and
+    * a real deployment swaps the parquet rewrite for a Delta/Iceberg
+    * MERGE keyed the same way.
+    */
+  def cdcApplySink(changes: DataFrame, tableDir: String,
+      checkpointDir: String, keys: Seq[String], snapshotEvery: Int = 1,
+      vacuumEvery: Int = 0, keepN: Int = 7):
+      org.apache.spark.sql.streaming.StreamingQuery =
+    changes.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        applyCdcBatch(batch, batchId, tableDir, keys, snapshotEvery)
+        maintainSink(batch.sparkSession, tableDir, batchId, vacuumEvery, keepN)
+      }
+      .outputMode("append")
+      .start()
+
+  /** One idempotent CDC micro-batch (factored out for replay specs).
+    * The batch IS a change log already, so its delta stores the raw
+    * I/U/D records verbatim (`seq` and `op` included) and every fold
+    * reads their own seq/op — exactly as the batch path would.
+    */
+  def applyCdcBatch(batch: DataFrame, batchId: Long, tableDir: String,
+      keys: Seq[String], snapshotEvery: Int = 1): Unit =
+    applyTableBatch(cdcTable(keys), batch, batchId, tableDir, snapshotEvery)
+
+  /** Read the current version of an [[upsertSink]] table (see
+    * [[readCurrent]]).
+    */
+  def readUpsertTable(spark: SparkSession, tableDir: String): DataFrame =
+    readCurrent(UpsertTable, spark, tableDir)
+
+  /** Time travel over an [[upsertSink]] table (see [[readVersion]]). */
+  def readUpsertTableVersion(spark: SparkSession, tableDir: String,
+      batchId: Long): DataFrame =
+    readVersion(UpsertTable, spark, tableDir, batchId)
+
+  /** Read the current version of a [[cdcApplySink]] table. */
+  def readCdcTable(spark: SparkSession, tableDir: String,
+      keys: Seq[String]): DataFrame =
+    readCurrent(cdcTable(keys), spark, tableDir)
+
+  /** Time travel over a [[cdcApplySink]] table. */
+  def readCdcTableVersion(spark: SparkSession, tableDir: String,
+      batchId: Long, keys: Seq[String]): DataFrame =
+    readVersion(cdcTable(keys), spark, tableDir, batchId)
+
+  // ---- the versioned table behind both sinks ----
+
+  /** What an upsert table and a CDC table differ in. Everything else —
+    * replay and crashed-flip repair, the snapshot cadence, the commit,
+    * reconstruction, the current read and time travel — is one path.
+    *  - `toDelta`: a batch → the rows stored as its delta `d<id>`;
+    *  - `toLog`: a delta with its batchId → change records carrying
+    *    `seqCol`/`opCol`, the input of the fold;
+    *  - `keys`: the fold's key columns.
+    */
+  private final case class TableKind(keys: Seq[String], seqCol: String,
+      opCol: String, toDelta: DataFrame => DataFrame,
+      toLog: (DataFrame, Long) => DataFrame)
+
+  private val UpsertTable = TableKind(Seq("user_id"), "__seq", "__op",
+    toDelta = { batch =>
+      require(!batch.columns.contains("__seq") && !batch.columns.contains("__op"),
+        "__seq/__op are reserved for the delta-fold reconstruction")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id")
+        .orderBy(col("ts").desc, col("event_id").desc)
+      // a null key can never be matched by a later batch: it would
+      // survive every merge as a ghost row, so it fails loudly here,
+      // fused into the projection the reduce already pays
+      batch.withColumn("user_id", when(col("user_id").isNull, raise_error(lit(
+          "upsert: user_id must be non-null — a null-keyed row can never " +
+            "be updated and would survive every merge")))
+          .otherwise(col("user_id")))
+        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+        .drop("__rn")
+    },
+    toLog = (delta, id) =>
+      delta.withColumn("__seq", lit(id)).withColumn("__op", lit("U")))
+
+  private def cdcTable(keys: Seq[String]) = TableKind(keys, "seq", "op",
+    toDelta = identity, toLog = (delta, _) => delta)
+
+  private def tableFs(spark: SparkSession, tableDir: String): FileSystem =
+    new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** One idempotent commit of `batch` as version `batchId`.
+    *
+    * `snapshotEvery` (r17 verdict #2) picks the version LAYOUT. 1 (the
+    * default): every batch writes a FULL snapshot directory `v<id>` —
+    * simple, but the retained window costs keepN × table-size,
+    * untenable at 100 TB. k > 1: the batch's delta is written as a
+    * DELTA directory `d<id>`, and only every k-th batch materializes a
+    * full `v<id>`, so the steady-state storage per batch is O(delta),
+    * not O(table). A snapshot commit is ONE
+    * [[graft.operators.CdcApply.applyLog]] over the newest snapshot at
+    * or before the pointer, the deltas after it and this batch's log —
+    * the fold a read of any version runs — so reads are bit-identical
+    * across layouts by construction (MaintenanceSpec pins it). The
+    * cadence is answered from the listing, so a replayed or
+    * crashed-and-resumed writer lands on the same layout without extra
+    * state.
+    */
+  private def applyTableBatch(kind: TableKind, batch: DataFrame,
+      batchId: Long, tableDir: String, snapshotEvery: Int): Unit = {
     require(snapshotEvery >= 1, s"snapshotEvery must be >= 1, got $snapshotEvery")
-    require(!batch.columns.contains("__seq") && !batch.columns.contains("__op"),
-      "__seq/__op are reserved for the delta-fold reconstruction")
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val currentPtr = new org.apache.hadoop.fs.Path(tableDir, "_current")
-    def flipPointer(dir: String, id: Long): Unit =
-      flipCurrentPointer(spark, fs, tableDir, dir, id)
-    val current: Option[(String, Long)] =
-      readPointer(fs, tableDir, uncommittedFallback = true)
+    val fs = tableFs(spark, tableDir)
+    val delta = kind.toDelta(batch)
+    val current = readPointer(fs, tableDir, uncommittedFallback = true)
     // idempotent replay: this batchId (or a later one) already applied
     if (current.exists(_._2 >= batchId)) {
       // a crash between the version write and the flip leaves the
-      // newest complete vN unreferenced (readPointer found it by
+      // newest complete version unreferenced (readPointer found it by
       // fallback); replay's only remaining duty is the flip itself
-      if (!fs.exists(currentPtr)) current.foreach((flipPointer _).tupled)
+      if (!fs.exists(new Path(tableDir, "_current")))
+        current.foreach { case (dir, id) =>
+          flipCurrentPointer(spark, fs, tableDir, dir, id) }
       return
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    val latest = batch
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .drop("__rn")
-    if (writeAsDelta(fs, tableDir, current, snapshotEvery)) {
-      latest.write.mode("overwrite").parquet(s"$tableDir/d$batchId")
-      flipPointer(s"d$batchId", batchId)
-    } else {
-      val merged = current match {
-        case None => latest
-        case Some((_, id)) =>
-          graft.operators.MergeUpsert.upsert(
-            reconstructUpsert(spark, fs, tableDir, id), latest, Seq("user_id"))
-      }
-      merged.write.mode("overwrite").parquet(s"$tableDir/v$batchId")
-      flipPointer(s"v$batchId", batchId)
+    val stateFields =
+      delta.schema.filterNot(f => f.name == kind.seqCol || f.name == kind.opCol)
+    val log = kind.toLog(delta, batchId)
+    val (dir, rows) = current match {
+      // first commit: the log folded over an empty table of its columns
+      case None => (s"v$batchId", fold(kind, spark, tableDir,
+        delta.select(stateFields.map(f => col(f.name)): _*).limit(0), Nil, Some(log)))
+      case Some((_, id)) =>
+        val (snapId, deltaIds) = versionChain(fs, tableDir, id)
+        val base = spark.read.parquet(s"$tableDir/v$snapId")
+        // names alone are not enough: a dtype mismatch would silently
+        // widen through the fold's union, changing the table's schema.
+        // Types compare without nullability, which a parquet read drops.
+        def shape(fields: Seq[StructField]) =
+          fields.map(f => s"${f.name} ${f.dataType.catalogString}")
+        require(shape(stateFields) == shape(base.schema),
+          s"batch $batchId columns ${shape(stateFields).mkString(", ")} " +
+            s"must match the table's ${shape(base.schema).mkString(", ")}")
+        if (deltaIds.size + 1 < snapshotEvery) (s"d$batchId", delta)
+        else (s"v$batchId", fold(kind, spark, tableDir, base, deltaIds, Some(log)))
     }
+    rows.write.mode("overwrite").parquet(s"$tableDir/$dir")
+    flipCurrentPointer(spark, fs, tableDir, dir, batchId)
   }
-
-  /** The snapshot-cadence decision: delta unless this is the first
-    * commit (a delta needs a base) or `snapshotEvery − 1` deltas have
-    * accumulated since the newest full snapshot. Answered from the
-    * listing, so a replayed or crashed-and-resumed writer lands on the
-    * same cadence without extra state.
-    */
-  private def writeAsDelta(fs: org.apache.hadoop.fs.FileSystem,
-      tableDir: String, current: Option[(String, Long)],
-      snapshotEvery: Int): Boolean =
-    snapshotEvery > 1 && current.isDefined && {
-      val (snaps, deltas) = listCompleteVersions(fs, tableDir)
-      // no full snapshot at all → write one (exists is false on None)
-      snaps.maxOption.exists(lastSnap =>
-        deltas.count(_ > lastSnap) + 1 < snapshotEvery)
-    }
 
   /** Complete (`_SUCCESS`-marked) version ids under `tableDir`:
     * (full snapshots `v<id>`, deltas `d<id>`).
     */
-  private def listCompleteVersions(fs: org.apache.hadoop.fs.FileSystem,
+  private def listCompleteVersions(fs: FileSystem,
       tableDir: String): (Seq[Long], Seq[Long]) = {
-    val base = new org.apache.hadoop.fs.Path(tableDir)
+    val base = new Path(tableDir)
     if (!fs.exists(base)) return (Nil, Nil)
     val complete = fs.listStatus(base).iterator.map(_.getPath.getName)
-      .filter(n => n.matches("[vd]\\d+") && fs.exists(
-        new org.apache.hadoop.fs.Path(s"$tableDir/$n/_SUCCESS"))).toSeq
+      .filter(n => n.matches("[vd]\\d+") &&
+        fs.exists(new Path(s"$tableDir/$n/_SUCCESS"))).toSeq
     (complete.filter(_.startsWith("v")).map(_.drop(1).toLong),
       complete.filter(_.startsWith("d")).map(_.drop(1).toLong))
   }
 
-  /** Reconstruct an upsert-table version under the log-structured
-    * layout: newest full snapshot at-or-before `targetId`, then ONE
-    * [[graft.operators.CdcApply.applyLog]] fold of every delta in
-    * (snapshot, target] — the delta's batchId is its seq (unique per
-    * key per delta: each delta is a latest-per-key reduce), every delta
-    * row an upsert. Column order is re-pinned to the snapshot's so the
-    * read is bit-identical to the full-snapshot layout. Trivially the
-    * direct parquet read when `targetId` IS a snapshot.
+  /** What version `targetId` is built from: the newest complete
+    * snapshot at or before it and the complete deltas in (snapshot,
+    * target], ascending.
     */
-  private def reconstructUpsert(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, tableDir: String,
-      targetId: Long): DataFrame = {
+  private def versionChain(fs: FileSystem, tableDir: String,
+      targetId: Long): (Long, Seq[Long]) = {
     val (snaps, deltas) = listCompleteVersions(fs, tableDir)
-    if (snaps.contains(targetId))
-      return spark.read.parquet(s"$tableDir/v$targetId")
-    val snapId = snaps.filter(_ < targetId).maxOption.getOrElse(
+    val snapId = snaps.filter(_ <= targetId).maxOption.getOrElse(
       throw new IllegalStateException(
         s"no full snapshot at or before $targetId under $tableDir — " +
           "was the base snapshot vacuumed past the retained window?"))
-    val base = spark.read.parquet(s"$tableDir/v$snapId")
-    val ids = deltas.filter(id => id > snapId && id <= targetId).sorted
-    require(ids.lastOption.contains(targetId),
+    (snapId, deltas.filter(id => id > snapId && id <= targetId).sorted)
+  }
+
+  /** ONE [[graft.operators.CdcApply.applyLog]] of the stored deltas
+    * `deltaIds` plus `extra` (a commit's own log) over `base`, column
+    * order re-pinned to the base's; the base itself when there is no
+    * log. A stored delta must fold into the base's columns — a table
+    * read through the other sink's reader fails here, loudly.
+    */
+  private def fold(kind: TableKind, spark: SparkSession, tableDir: String,
+      base: DataFrame, deltaIds: Seq[Long], extra: Option[DataFrame]): DataFrame = {
+    val logs = deltaIds.map { id =>
+      val log = kind.toLog(spark.read.parquet(s"$tableDir/d$id"), id)
+      require(log.columns.toSet == base.columns.toSet + kind.seqCol + kind.opCol,
+        s"delta d$id columns ${log.columns.mkString(",")} do not fold into " +
+          s"snapshot columns ${base.columns.mkString(",")} — read a CDC-log " +
+          "table with readCdcTable, an upsert table with readUpsertTable")
+      log
+    } ++ extra
+    if (logs.isEmpty) base
+    else graft.operators.CdcApply.applyLog(base, logs.reduce(_ unionByName _),
+      kind.keys, kind.seqCol, kind.opCol).select(base.columns.map(col): _*)
+  }
+
+  /** Version `targetId`: its chain's snapshot with the deltas folded in
+    * (≤ k−1 of them under the log layout; none when it IS a snapshot).
+    */
+  private def reconstruct(kind: TableKind, spark: SparkSession,
+      fs: FileSystem, tableDir: String, targetId: Long): DataFrame = {
+    val (snapId, deltaIds) = versionChain(fs, tableDir, targetId)
+    require(snapId == targetId || deltaIds.lastOption.contains(targetId),
       s"version $targetId is not a committed snapshot or delta under $tableDir")
-    val log = ids.map { id =>
-      val d = spark.read.parquet(s"$tableDir/d$id")
-      require(d.columns.sorted.sameElements(base.columns.sorted),
-        s"delta d$id schema ${d.columns.mkString(",")} != snapshot schema " +
-          s"${base.columns.mkString(",")} — a CDC-log table must be read " +
-          "with readCdcTable (its deltas carry seq/op change records)")
-      d.withColumn("__seq", lit(id)).withColumn("__op", lit("U"))
-    }.reduce(_ unionByName _)
-    graft.operators.CdcApply.applyLog(base, log, Seq("user_id"), "__seq", "__op")
-      .select(base.columns.map(col): _*)
+    fold(kind, spark, tableDir, spark.read.parquet(s"$tableDir/v$snapId"),
+      deltaIds, None)
   }
 
   /** Atomic `_current` flip shared by the upsert and CDC sinks:
@@ -1227,144 +1331,15 @@ object Streams {
     * refuses to clobber, which is why the naive flip needed the racy
     * delete first.)
     */
-  private def flipCurrentPointer(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, tableDir: String,
-      dir: String, id: Long): Unit = {
-    val currentPtr = new org.apache.hadoop.fs.Path(tableDir, "_current")
-    val tmp = new org.apache.hadoop.fs.Path(tableDir, s"_current.tmp$id")
+  private def flipCurrentPointer(spark: SparkSession, fs: FileSystem,
+      tableDir: String, dir: String, id: Long): Unit = {
+    val currentPtr = new Path(tableDir, "_current")
+    val tmp = new Path(tableDir, s"_current.tmp$id")
     val out = fs.create(tmp, true)
     try out.write(s"$dir,$id".getBytes("UTF-8")) finally out.close()
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       currentPtr.toUri, spark.sparkContext.hadoopConfiguration)
     fc.rename(tmp, currentPtr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Streaming CDC apply — the streaming twin of
-    * [[graft.operators.CdcApply]] and the inverse-of-[[snapshot-diff]]
-    * maintenance loop: an append-only change stream (I/U/D records,
-    * per-key-monotone `seq`) folds into the same versioned
-    * pointer-flipped table the upsert sink maintains. Each micro-batch
-    * is ONE CdcApply.applyLog of the batch against the current version
-    * — batch-wise folding equals whole-log folding because last-writer-
-    * wins is associative over seq-ordered prefixes (CdcApplySinkSpec
-    * pins streamed ≡ one-shot). Same exactly-once recipe as
-    * [[upsertSink]]: versioned dirs + recorded batchId + atomic pointer
-    * flip; a replayed epoch is skipped, a crash between write and flip
-    * re-runs the batch. At 100 TB per-batch cost is O(batch + current
-    * table) through one map-side-combinable aggregate — the table
-    * never self-joins — and a real deployment swaps the parquet
-    * rewrite for a Delta/Iceberg MERGE keyed the same way.
-    */
-  def cdcApplySink(changes: DataFrame, tableDir: String,
-      checkpointDir: String, keys: Seq[String], snapshotEvery: Int = 1,
-      vacuumEvery: Int = 0, keepN: Int = 7):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcBatch(batch, batchId, tableDir, keys,
-          snapshotEvery = snapshotEvery)
-        maintainSink(batch.sparkSession, tableDir, batchId, vacuumEvery, keepN)
-      }
-      .outputMode("append")
-      .start()
-
-  /** One idempotent CDC micro-batch (factored out for replay specs).
-    *
-    * With `snapshotEvery` k > 1 the CDC sink goes log-structured even
-    * more naturally than the upsert sink: the batch IS a change log
-    * already, so a delta directory stores the raw I/U/D records
-    * verbatim (seq and op included) and a reader folds the retained
-    * deltas through [[graft.operators.CdcApply.applyLog]] exactly as
-    * the batch path would have — batch-wise ≡ whole-log folding is the
-    * sink's existing associativity argument. Every k-th batch
-    * materializes a full `v<id>`. Reads via [[readCdcTable]] /
-    * [[readCdcTableVersion]] (the fold needs the key/seq/op names).
-    */
-  def applyCdcBatch(batch: DataFrame, batchId: Long, tableDir: String,
-      keys: Seq[String], seqCol: String = "seq", opCol: String = "op",
-      snapshotEvery: Int = 1): Unit = {
-    require(snapshotEvery >= 1, s"snapshotEvery must be >= 1, got $snapshotEvery")
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val currentPtr = new org.apache.hadoop.fs.Path(tableDir, "_current")
-    val current: Option[(String, Long)] =
-      readPointer(fs, tableDir, uncommittedFallback = true)
-    if (current.exists(_._2 >= batchId)) {
-      if (!fs.exists(currentPtr)) current.foreach { case (dir, id) =>
-        flipCurrentPointer(spark, fs, tableDir, dir, id)
-      }
-      return
-    }
-    if (writeAsDelta(fs, tableDir, current, snapshotEvery)) {
-      batch.write.mode("overwrite").parquet(s"$tableDir/d$batchId")
-      flipCurrentPointer(spark, fs, tableDir, s"d$batchId", batchId)
-    } else {
-      val snapCols = batch.columns.filterNot(Set(seqCol, opCol)).toSeq
-      val base = current match {
-        case Some((_, id)) =>
-          reconstructCdc(spark, fs, tableDir, id, keys, seqCol, opCol)
-        // first batch: fold against an empty snapshot with the log's
-        // own snapshot schema (keys + payload)
-        case None => batch.select(snapCols.map(col): _*).limit(0)
-      }
-      val merged = graft.operators.CdcApply
-        .applyLog(base, batch, keys, seqCol, opCol)
-      val newDir = s"v$batchId"
-      merged.write.mode("overwrite").parquet(s"$tableDir/$newDir")
-      flipCurrentPointer(spark, fs, tableDir, newDir, batchId)
-    }
-  }
-
-  /** [[reconstructUpsert]]'s CDC twin: newest snapshot at-or-before
-    * `targetId`, then ONE applyLog fold of the retained raw change
-    * deltas (their own seq/op decide — per-key-monotone seq across
-    * batches is the sink's existing contract).
-    */
-  private def reconstructCdc(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, tableDir: String,
-      targetId: Long, keys: Seq[String], seqCol: String,
-      opCol: String): DataFrame = {
-    val (snaps, deltas) = listCompleteVersions(fs, tableDir)
-    if (snaps.contains(targetId))
-      return spark.read.parquet(s"$tableDir/v$targetId")
-    val snapId = snaps.filter(_ < targetId).maxOption.getOrElse(
-      throw new IllegalStateException(
-        s"no full snapshot at or before $targetId under $tableDir — " +
-          "was the base snapshot vacuumed past the retained window?"))
-    val base = spark.read.parquet(s"$tableDir/v$snapId")
-    val ids = deltas.filter(id => id > snapId && id <= targetId).sorted
-    require(ids.lastOption.contains(targetId),
-      s"version $targetId is not a committed snapshot or delta under $tableDir")
-    val log = ids.map(id => spark.read.parquet(s"$tableDir/d$id"))
-      .reduce(_ unionByName _)
-    graft.operators.CdcApply.applyLog(base, log, keys, seqCol, opCol)
-      .select(base.columns.map(col): _*)
-  }
-
-  /** Read the current state of a log-structured [[cdcApplySink]] table
-    * (also correct on the full-snapshot layout, where it degenerates to
-    * the direct snapshot read).
-    */
-  def readCdcTable(spark: SparkSession, tableDir: String, keys: Seq[String],
-      seqCol: String = "seq", opCol: String = "op"): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, id) = readPointer(fs, tableDir, uncommittedFallback = false)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed version under $tableDir"))
-    reconstructCdc(spark, fs, tableDir, id, keys, seqCol, opCol)
-  }
-
-  /** Time travel over a log-structured [[cdcApplySink]] table. */
-  def readCdcTableVersion(spark: SparkSession, tableDir: String,
-      batchId: Long, keys: Seq[String], seqCol: String = "seq",
-      opCol: String = "op"): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireVersionExists(spark, fs, tableDir, batchId)
-    reconstructCdc(spark, fs, tableDir, batchId, keys, seqCol, opCol)
   }
 
   /** Read `_current` (dir, batchId) with a bounded retry: on an object
@@ -1377,16 +1352,17 @@ object Streams {
     * can serve an in-flight batch's version on a FRESH table whose
     * pointer never existed (first batch mid-commit): if the writer is
     * then permanently abandoned, that state never commits. The writer's
-    * replay/repair path (applyUpsertBatch) passes true — it NEEDS the
-    * newest complete version to finish a crashed flip, and anything it
-    * reads it deterministically rewrites. Reader paths
-    * (readUpsertTable) pass false and stay fail-loud: a missing pointer
-    * after retries means no batch has ever committed. Returns None when
-    * no pointer (and, with the fallback, no complete version) exists.
+    * replay/repair path ([[applyTableBatch]]) passes true — it NEEDS
+    * the newest complete version to finish a crashed flip, and anything
+    * it reads it deterministically rewrites. Reader paths
+    * ([[committedPointer]]) pass false and stay fail-loud: a missing
+    * pointer after retries means no batch has ever committed. Returns
+    * None when no pointer (and, with the fallback, no complete version)
+    * exists.
     */
-  private def readPointer(fs: org.apache.hadoop.fs.FileSystem,
-      tableDir: String, uncommittedFallback: Boolean): Option[(String, Long)] = {
-    val currentPtr = new org.apache.hadoop.fs.Path(tableDir, "_current")
+  private def readPointer(fs: FileSystem, tableDir: String,
+      uncommittedFallback: Boolean): Option[(String, Long)] = {
+    val currentPtr = new Path(tableDir, "_current")
     var attempt = 0
     while (attempt < 3) {
       try {
@@ -1402,71 +1378,80 @@ object Streams {
       }
     }
     if (!uncommittedFallback) return None
-    val base = new org.apache.hadoop.fs.Path(tableDir)
-    if (!fs.exists(base)) return None
-    fs.listStatus(base).iterator
-      .map(_.getPath.getName)
-      // both layouts: full snapshots v<id> and log-structured deltas d<id>
-      .collect { case n if n.matches("[vd]\\d+") => (n, n.drop(1).toLong) }
-      .filter { case (n, _) =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$tableDir/$n/_SUCCESS")) }
-      .reduceOption((a, b) => if (a._2 >= b._2) a else b)
+    // both layouts: full snapshots v<id> and log-structured deltas d<id>
+    val (snaps, deltas) = listCompleteVersions(fs, tableDir)
+    (snaps.map(id => (s"v$id", id)) ++ deltas.map(id => (s"d$id", id)))
+      .maxByOption(_._2)
   }
 
-  /** Read the current version of an [[upsertSink]] table (fails loudly
-    * if no batch has committed yet). Tolerates a concurrent pointer
-    * flip via [[readPointer]]'s bounded retry; deliberately does NOT
-    * use the newest-complete-version fallback — on a fresh table that
-    * could expose an in-flight first batch that never commits.
+  /** The committed `_current` pointer for a reader (fails loudly if no
+    * batch has committed yet). Tolerates a concurrent pointer flip via
+    * [[readPointer]]'s bounded retry; deliberately does NOT use the
+    * newest-complete-version fallback — on a fresh table that could
+    * expose an in-flight first batch that never commits.
     */
-  def readUpsertTable(spark: SparkSession, tableDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (dir, id) = readPointer(fs, tableDir, uncommittedFallback = false)
-      .getOrElse {
-        // distinguish "table never committed" from "pointer lost
-        // mid-flip on a copy+delete-rename store": complete version
-        // dirs existing without a _current pointer means the data is
-        // committed and only the pointer read raced — report that
-        // (and advise retry) instead of claiming an empty table. The
-        // versions are still NOT served: auto-picking one would turn a
-        // transient race into a silent read of an unpointed version.
-        val base = new org.apache.hadoop.fs.Path(tableDir)
-        val committed =
-          if (!fs.exists(base)) 0
-          else fs.listStatus(base).count { st =>
-            st.getPath.getName.matches("[vd]\\d+") && fs.exists(
-              new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
-          }
-        throw new IllegalStateException(
-          if (committed == 0) s"no committed version under $tableDir"
-          else s"_current pointer missing under $tableDir but " +
-            s"$committed committed version dir(s) exist — likely an " +
-            "in-flight pointer flip on a non-atomic rename store; " +
-            "retry the read (the writer re-creates the pointer at the " +
-            "end of every batch)")
-      }
-    // log-structured layout: a delta pointer reconstructs (≤ k−1 delta
-    // folds over the newest snapshot); a snapshot pointer reads direct
-    if (dir.startsWith("d")) reconstructUpsert(spark, fs, tableDir, id)
-    else spark.read.parquet(s"$tableDir/$dir")
+  private def committedPointer(fs: FileSystem, tableDir: String): (String, Long) =
+    readPointer(fs, tableDir, uncommittedFallback = false).getOrElse {
+      // distinguish "table never committed" from "pointer lost
+      // mid-flip on a copy+delete-rename store": complete version
+      // dirs existing without a _current pointer means the data is
+      // committed and only the pointer read raced — report that
+      // (and advise retry) instead of claiming an empty table. The
+      // versions are still NOT served: auto-picking one would turn a
+      // transient race into a silent read of an unpointed version.
+      val (snaps, deltas) = listCompleteVersions(fs, tableDir)
+      val committed = snaps.size + deltas.size
+      throw new IllegalStateException(
+        if (committed == 0) s"no committed version under $tableDir"
+        else s"_current pointer missing under $tableDir but " +
+          s"$committed committed version dir(s) exist — likely an " +
+          "in-flight pointer flip on a non-atomic rename store; " +
+          "retry the read (the writer re-creates the pointer at the " +
+          "end of every batch)")
+    }
+
+  /** The current version of a versioned table: the pointed snapshot,
+    * or under the log layout the pointed delta reconstructed over the
+    * newest snapshot before it.
+    */
+  private def readCurrent(kind: TableKind, spark: SparkSession,
+      tableDir: String): DataFrame = {
+    val fs = tableFs(spark, tableDir)
+    reconstruct(kind, spark, fs, tableDir, committedPointer(fs, tableDir)._2)
   }
 
-  /** TIME TRAVEL over an [[upsertSink]] table: read the state as of a
-    * specific committed batchId — every batch leaves its own versioned
-    * directory, so historical states stay addressable until compacted
-    * (the pattern Delta's `versionAsOf` formalizes; here the version
-    * directory IS the snapshot). Fails with the available versions
-    * listed when the requested batch never committed — a silent
-    * fallback to a nearby version would un-pin a reproducibility read.
+  /** TIME TRAVEL: read the state as of a specific committed batchId —
+    * every batch leaves its own versioned directory, so historical
+    * states stay addressable until vacuumed (the pattern Delta's
+    * `versionAsOf` formalizes). Only COMMITTED versions are served:
+    * complete, and at or before the `_current` pointer — a complete
+    * version newer than the pointer is a crashed flip the current read
+    * refuses too. Fails with the committed versions listed otherwise —
+    * a silent fallback to a nearby version would un-pin a
+    * reproducibility read.
     */
+  private def readVersion(kind: TableKind, spark: SparkSession,
+      tableDir: String, batchId: Long): DataFrame = {
+    val fs = tableFs(spark, tableDir)
+    val pointerId = committedPointer(fs, tableDir)._2
+    val (snaps, deltas) = listCompleteVersions(fs, tableDir)
+    val committed = (snaps.map(id => (id, s"v$id")) ++ deltas.map(id => (id, s"d$id")))
+      .filter(_._1 <= pointerId).sorted
+    if (!committed.exists(_._1 == batchId))
+      throw new IllegalArgumentException(
+        s"no committed batch v$batchId under $tableDir " +
+          s"(available: ${committed.map(_._2).mkString(", ")})")
+    reconstruct(kind, spark, fs, tableDir, batchId)
+  }
+
   /** Retention for the versioned pointer-flipped table (r16 verdict
     * #1a — the acknowledged growth-without-bound: every batch leaves a
-    * FULL snapshot directory, so a months-running upsert/CDC sink
-    * stores months × table-size until something deletes): drop every
-    * version directory older than the newest `keepN` committed
-    * versions. Time travel ([[readUpsertTableVersion]]) keeps working
-    * over exactly the retained window — the Delta/Iceberg
+    * version directory, so a months-running upsert/CDC sink stores
+    * months × (table-size or delta-size) until something deletes):
+    * drop every version directory outside the newest `keepN` committed
+    * full snapshots and the deltas they reconstruct (see
+    * [[retentionVictimsLog]]). Time travel ([[readUpsertTableVersion]])
+    * keeps working over exactly the retained window — the Delta/Iceberg
     * `VACUUM ... RETAIN` contract.
     *
     * Safety invariants, each load-bearing:
@@ -1476,7 +1461,7 @@ object Streams {
     *  - the pointed version is retained unconditionally (it is the
     *    newest committed one, so it is always inside `keepN`);
     *  - version dirs NEWER than the pointer are never touched: that is
-    *    the crashed-flip state [[applyUpsertBatch]]'s replay path needs
+    *    the crashed-flip state [[applyTableBatch]]'s replay path needs
     *    to finish (writing then flipping), not garbage;
     *  - incomplete OLD dirs (no `_SUCCESS`, id < pointer) are crash
     *    debris of batches that were later rewritten — deleted with the
@@ -1490,18 +1475,17 @@ object Streams {
     */
   def vacuumVersions(spark: SparkSession, tableDir: String,
       keepN: Int): Seq[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs(spark, tableDir)
     // single-maintainer contract made checkable (r17 verdict #5): two
     // concurrent vacuums (or a vacuum racing another maintainer's
     // rewrite) would interleave the list-decide-delete below
     graft.operators.MaintenanceLock.withLock(fs,
-      new org.apache.hadoop.fs.Path(tableDir, "_maintenance.lock")) {
+      new Path(tableDir, "_maintenance.lock")) {
     val (_, curId) = readPointer(fs, tableDir, uncommittedFallback = false)
       .getOrElse(throw new IllegalStateException(
         s"no committed _current pointer under $tableDir — refusing to " +
           "vacuum an uncommitted table"))
-    val names = fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
+    val names = fs.listStatus(new Path(tableDir))
       .iterator.map(_.getPath.getName)
       .filter(_.matches("[vd]\\d+")).toSeq
     // the retention window counts COMPLETE versions only (r17 review
@@ -1509,7 +1493,7 @@ object Streams {
     // otherwise displace a READABLE version from the promised window —
     // debris is deleted unconditionally, never retained in its place
     val (complete, incomplete) = names.partition(n =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$tableDir/$n/_SUCCESS")))
+      fs.exists(new Path(s"$tableDir/$n/_SUCCESS")))
     def idsOf(p: Char) = complete.filter(_.head == p)
       .map(_.drop(1).toLong).filter(_ <= curId)
     val (snapVictims, deltaVictims) =
@@ -1518,7 +1502,7 @@ object Streams {
     val victimNames = snapVictims.map("v" + _) ++ deltaVictims.map("d" + _) ++
       debrisNames
     victimNames.foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(tableDir, n), true)
+      fs.delete(new Path(tableDir, n), true)
     }
     (snapVictims ++ deltaVictims ++ debrisNames.map(_.drop(1).toLong)).sorted
     }
@@ -1527,21 +1511,13 @@ object Streams {
   /** The pure retention decision [[vacuumVersions]] executes over the
     * COMMITTED (complete, id ≤ pointer) version ids — factored so
     * PropertySpec can pin the safety invariants over generated version
-    * sets without a filesystem: victims never include the pointed
-    * version, never anything newer than the pointer, and always leave
-    * exactly min(keepN, committed) committed versions.
-    */
-  private[graft] def retentionVictims(committedIds: Seq[Long], pointerId: Long,
-      keepN: Int): Seq[Long] =
-    retentionVictimsLog(committedIds, Nil, pointerId, keepN)._1
-
-  /** The log-structured retention decision: `keepN` counts FULL
-    * SNAPSHOTS; every delta newer than the OLDEST retained snapshot is
-    * retained too (each retained version ≥ that snapshot reconstructs
-    * from it), and every delta at or below it — unreachable from any
-    * retained base — expires with the old snapshots. On a pure
-    * full-snapshot table (no deltas) this is exactly the original
-    * rule. Same pinned invariants (PropertySpec): the pointed version
+    * sets without a filesystem. `keepN` counts FULL SNAPSHOTS; every
+    * delta newer than the OLDEST retained snapshot is retained too
+    * (each retained version ≥ that snapshot reconstructs from it), and
+    * every delta at or below it — unreachable from any retained base —
+    * expires with the old snapshots. On a pure full-snapshot table (no
+    * deltas) the victims are exactly the committed versions older than
+    * the newest `keepN`. Pinned invariants: the pointed version
     * (snapshot OR delta) is never a victim, nothing newer than the
     * pointer is touched, and min(keepN, committed snapshots) snapshots
     * survive.
@@ -1556,30 +1532,5 @@ object Streams {
     val floor = keep.headOption.getOrElse(Long.MinValue)
     (snaps.filterNot(keepSet),
       deltaIds.sorted.filter(id => id <= pointerId && id < floor))
-  }
-
-  /** Loud existence check shared by the time-travel readers: the
-    * requested batch must have left a complete snapshot or delta dir —
-    * a silent fallback to a nearby version would un-pin a
-    * reproducibility read.
-    */
-  private def requireVersionExists(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, tableDir: String,
-      batchId: Long): Unit =
-    if (!fs.exists(new org.apache.hadoop.fs.Path(tableDir, s"v$batchId")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(tableDir, s"d$batchId"))) {
-      val versions = fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-        .map(_.getPath.getName).filter(_.matches("[vd]\\d+")).sorted
-      throw new IllegalArgumentException(
-        s"no committed batch v$batchId under $tableDir " +
-          s"(available: ${versions.mkString(", ")})")
-    }
-
-  def readUpsertTableVersion(spark: SparkSession, tableDir: String,
-      batchId: Long): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireVersionExists(spark, fs, tableDir, batchId)
-    reconstructUpsert(spark, fs, tableDir, batchId)
   }
 }

@@ -47,20 +47,27 @@ class MaintenanceSpec extends SparkSpec {
       Streams.vacuumVersions(spark, table, keepN = 0))
   }
 
-  test("vacuumVersions spares crashed-flip versions newer than the pointer, eats old debris") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vacuum2").toString
-    val table = s"$dir/table"
+  /** Committed v0 and v2 (the pointer), plus two crash leftovers: v1,
+    * debris of a batch whose id sits BELOW the pointer but never
+    * completed (no _SUCCESS), and v99, a complete version NEWER than
+    * the pointer — the crashed-flip state the writer's replay path
+    * finishes.
+    */
+  private def crashedFlipFixture(prefix: String): String = {
+    val table = java.nio.file.Files.createTempDirectory(prefix).toString + "/table"
     Streams.applyUpsertBatch(
       Seq(Ev(1, at(0), 100L, "click", 1.0)).toDF(), 0L, table)
     Streams.applyUpsertBatch(
       Seq(Ev(2, at(1), 100L, "click", 2.0)).toDF(), 2L, table)
-    // v1: crash debris of a batch whose id sits BELOW the pointer but
-    // never completed (no _SUCCESS) — expired window, must go
     assert(new java.io.File(s"$table/v1").mkdir())
-    // v99: a complete version NEWER than the pointer — the crashed-flip
-    // state the writer's replay path finishes; vacuum must not touch it
     assert(new java.io.File(s"$table/v99").mkdir())
     assert(new java.io.File(s"$table/v99/_SUCCESS").createNewFile())
+    table
+  }
+
+  test("vacuumVersions spares crashed-flip versions newer than the pointer, eats old debris") {
+    // v1 is in the expired window and must go; vacuum must not touch v99
+    val table = crashedFlipFixture("graft_vacuum2")
     val deleted = Streams.vacuumVersions(spark, table, keepN = 1)
     assert(deleted == Seq(0L, 1L))
     assert(versionDirs(table) == Set("v2", "v99"))
@@ -71,6 +78,19 @@ class MaintenanceSpec extends SparkSpec {
     new java.io.File(s"$fresh/table/v0").mkdirs()
     intercept[IllegalStateException](
       Streams.vacuumVersions(spark, s"$fresh/table", keepN = 1))
+  }
+
+  test("time travel serves only committed versions: never newer than the pointer, never debris") {
+    val table = crashedFlipFixture("graft_tt_bound")
+    // the current read refuses v99 (the pointer says v2); time travel
+    // must refuse it too, and list only complete versions ≤ the pointer
+    Seq(99L, 1L).foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        Streams.readUpsertTableVersion(spark, table, v))
+      assert(e.getMessage.contains("(available: v0, v2)"), e.getMessage)
+    }
+    assert(Streams.readUpsertTableVersion(spark, table, 2L)
+      .select("event_id").as[Long].collect().toSet == Set(2L))
   }
 
   test("vacuumVersions: debris inside the keepN window never displaces a committed version") {
@@ -306,54 +326,125 @@ class MaintenanceSpec extends SparkSpec {
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq.toSeq).toSeq.sortBy(_.mkString("|"))
 
-  /** 8 overlapping-key upsert batches, replayed into a full-snapshot
-    * table and a snapshotEvery=3 log-structured one.
+  /** One sink as the twin-layout tests drive it: 8 overlapping-key
+    * batches, its apply (batch, batchId, table, snapshotEvery), and its
+    * current and time-travel readers.
     */
-  private def buildTwinLayouts(dir: String): (String, String, Seq[org.apache.spark.sql.DataFrame]) = {
-    val full = s"$dir/full"; val logT = s"$dir/log"
-    val batches = (0 until 8).map { i =>
+  private case class SinkKind(name: String,
+      batches: Seq[org.apache.spark.sql.DataFrame],
+      apply: (org.apache.spark.sql.DataFrame, Long, String, Int) => Unit,
+      read: String => org.apache.spark.sql.DataFrame,
+      readVersion: (String, Long) => org.apache.spark.sql.DataFrame)
+
+  private def upsertKind = SinkKind("upsert",
+    (0 until 8).map { i =>
       Seq(Ev(10L * i + 1, at(i), 100L + i % 3, "click", i.toDouble),
         Ev(10L * i + 2, at(i), 200L, "view", i * 2.0)).toDF()
+    },
+    Streams.applyUpsertBatch(_, _, _, _),
+    Streams.readUpsertTable(spark, _),
+    Streams.readUpsertTableVersion(spark, _, _))
+
+  // keys 1-3 take turns, key 4 changes every batch; key 1 is deleted at
+  // batch 3 and re-inserted at 6, key 2 is deleted at 7
+  private def cdcKind = SinkKind("cdc",
+    (0 until 8).map { i =>
+      val op = if (i == 0) "I" else "U"
+      Seq(Chg(1L + i % 3, i.toDouble, s"a$i", 10L * i + 1,
+          if (i % 4 == 3) "D" else op),
+        Chg(4L, i * 2.0, s"b$i", 10L * i + 2, op)).toDF()
+    },
+    Streams.applyCdcBatch(_, _, _, Seq("k"), _),
+    Streams.readCdcTable(spark, _, Seq("k")),
+    Streams.readCdcTableVersion(spark, _, _, Seq("k")))
+
+  /** `kind`'s batches replayed into a full-snapshot table and a
+    * snapshotEvery=3 log-structured one.
+    */
+  private def buildTwinLayouts(dir: String, kind: SinkKind): (String, String) = {
+    val full = s"$dir/full"; val logT = s"$dir/log"
+    kind.batches.zipWithIndex.foreach { case (b, i) =>
+      kind.apply(b, i.toLong, full, 1)
+      kind.apply(b, i.toLong, logT, 3)
     }
-    batches.zipWithIndex.foreach { case (b, i) =>
-      Streams.applyUpsertBatch(b, i.toLong, full)
-      Streams.applyUpsertBatch(b, i.toLong, logT, snapshotEvery = 3)
-    }
-    (full, logT, batches)
+    (full, logT)
   }
 
   test("log-structured upsert layout: reads bit-identical to the full-snapshot layout at every version") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_log_upsert").toString
-    val (full, logT, batches) = buildTwinLayouts(dir)
-    // layout shape: a full snapshot only every 3rd batch — storage per
-    // intermediate batch is the DELTA, not the table
-    assert(dirNames(logT) == Set("v0", "d1", "d2", "v3", "d4", "d5", "v6", "d7"))
-    assert(dirNames(full) == (0 until 8).map("v" + _).toSet)
-    // current read and EVERY time-travel version bit-identical, schema
-    // (incl. column order) included
-    assert(Streams.readUpsertTable(spark, logT).schema ==
-      Streams.readUpsertTable(spark, full).schema)
-    assert(canon(Streams.readUpsertTable(spark, logT)) ==
-      canon(Streams.readUpsertTable(spark, full)))
-    (0 until 8).foreach { i =>
-      assert(canon(Streams.readUpsertTableVersion(spark, logT, i.toLong)) ==
-        canon(Streams.readUpsertTableVersion(spark, full, i.toLong)),
-        s"version $i diverges")
+    // both sinks run on one versioned-table core; pin each kind
+    Seq(upsertKind, cdcKind).foreach { kind =>
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"graft_log_${kind.name}").toString
+      val (full, logT) = buildTwinLayouts(dir, kind)
+      // layout shape: a full snapshot only every 3rd batch — storage per
+      // intermediate batch is the DELTA, not the table
+      assert(dirNames(logT) == Set("v0", "d1", "d2", "v3", "d4", "d5", "v6", "d7"))
+      assert(dirNames(full) == (0 until 8).map("v" + _).toSet)
+      // current read and EVERY time-travel version bit-identical, schema
+      // (incl. column order) included
+      def same(got: org.apache.spark.sql.DataFrame,
+          want: org.apache.spark.sql.DataFrame, what: String): Unit = {
+        assert(got.schema == want.schema, s"${kind.name} $what: schema diverges")
+        assert(canon(got) == canon(want), s"${kind.name} $what diverges")
+      }
+      same(kind.read(logT), kind.read(full), "current")
+      (0 until 8).foreach { i =>
+        same(kind.readVersion(logT, i.toLong), kind.readVersion(full, i.toLong),
+          s"version $i")
+      }
+      // idempotent replay: an already-applied batch is a no-op
+      kind.apply(kind.batches(2), 2L, logT, 3)
+      assert(dirNames(logT).size == 8)
+      // crashed flip after the last delta write: pointer gone → replay's
+      // only duty is the flip itself (the fallback finds d7)
+      assert(new java.io.File(s"$logT/_current").delete())
+      kind.apply(kind.batches(7), 7L, logT, 3)
+      same(kind.read(logT), kind.read(full), "current after the repair")
     }
-    // idempotent replay: an already-applied batch is a no-op
-    Streams.applyUpsertBatch(batches(2), 2L, logT, snapshotEvery = 3)
-    assert(dirNames(logT).size == 8)
-    // crashed flip after the last delta write: pointer gone → replay's
-    // only duty is the flip itself (the fallback finds d7)
-    assert(new java.io.File(s"$logT/_current").delete())
-    Streams.applyUpsertBatch(batches(7), 7L, logT, snapshotEvery = 3)
-    assert(canon(Streams.readUpsertTable(spark, logT)) ==
-      canon(Streams.readUpsertTable(spark, full)))
+  }
+
+  test("upsert commits refuse a null user_id or a changed schema: as batch 0, as a delta, as a snapshot") {
+    def batch(i: Int, key: Option[Long]) =
+      Seq((Option(100L), at(i), 10L * i + 1, i.toDouble),
+        (key, at(i), 10L * i + 2, i * 2.0)).toDF("user_id", "ts", "event_id", "value")
+    def msgs(t: Throwable): String =
+      if (t == null) "" else Option(t.getMessage).getOrElse("") + msgs(t.getCause)
+    // (snapshotEvery, the batch that carries the null key): batch 0 is
+    // always a snapshot; under 3, batch 1 is a delta and batch 3 a
+    // snapshot commit folding two deltas
+    Seq((1, 0), (1, 1), (3, 0), (3, 1), (3, 3)).foreach { case (every, bad) =>
+      val table = java.nio.file.Files
+        .createTempDirectory(s"graft_null_key_${every}_$bad").toString + "/table"
+      (0 until bad).foreach(i =>
+        Streams.applyUpsertBatch(batch(i, Some(200L)), i.toLong, table, every))
+      val before = if (bad == 0) Nil else canon(Streams.readUpsertTable(spark, table))
+      val e = intercept[Exception](
+        Streams.applyUpsertBatch(batch(bad, None), bad.toLong, table, every))
+      assert(msgs(e).contains("user_id must be non-null"), s"($every, $bad): ${msgs(e)}")
+      // nothing committed: the pointer and the served state are unchanged
+      if (bad == 0)
+        intercept[IllegalStateException](Streams.readUpsertTable(spark, table))
+      else assert(canon(Streams.readUpsertTable(spark, table)) == before)
+      // once a table exists, every commit must carry its exact columns
+      // (order included) and types
+      if (bad > 0) Seq(
+          batch(bad, Some(200L)).withColumn("value", col("value").cast("string")),
+          batch(bad, Some(200L)).select("ts", "user_id", "event_id", "value"))
+        .foreach { b =>
+          val e = intercept[IllegalArgumentException](
+            Streams.applyUpsertBatch(b, bad.toLong, table, every))
+          assert(e.getMessage.contains("must match the table's"), e.getMessage)
+        }
+      // and the same batchId still commits once the batch is clean
+      Streams.applyUpsertBatch(batch(bad, Some(200L)), bad.toLong, table, every)
+      assert(canon(Streams.readUpsertTable(spark, table)).map(_.take(3)) ==
+        Seq(Seq(100L, at(bad), 10L * bad + 1), Seq(200L, at(bad), 10L * bad + 2)))
+    }
   }
 
   test("vacuum on the log layout: keepN counts SNAPSHOTS, reachable deltas survive") {
     val dir = java.nio.file.Files.createTempDirectory("graft_log_vacuum").toString
-    val (full, logT, _) = buildTwinLayouts(dir)
+    val (full, logT) = buildTwinLayouts(dir, upsertKind)
     val want7 = canon(Streams.readUpsertTableVersion(spark, full, 7L))
     val want4 = canon(Streams.readUpsertTableVersion(spark, full, 4L))
     // keep 2 snapshots: v3, v6 stay; deltas ≥ v3 stay (each retained

@@ -42,7 +42,8 @@ class PropertySpec extends SparkSpec {
       keepN <- Gen.choose(1, 6)
     } yield ((ids :+ pointer).distinct, pointer, keepN) // the pointed dir always exists, ids unique (directory names)
     samples(gen, 60).foreach { case (ids, pointer, keepN) =>
-      val victims = graft.streaming.Streams.retentionVictims(ids, pointer, keepN)
+      val victims = graft.streaming.Streams
+        .retentionVictimsLog(ids, Nil, pointer, keepN)._1
       val committed = ids.filter(_ <= pointer)
       assert(!victims.contains(pointer), "pointed version deleted")
       assert(victims.forall(_ <= pointer), "crashed-flip version deleted")
@@ -94,8 +95,7 @@ class PropertySpec extends SparkSpec {
       }
       // pure-snapshot tables degrade to the original rule exactly
       if (deltas.isEmpty)
-        assert(sv == graft.streaming.Streams
-          .retentionVictims(snaps, pointer, keepN))
+        assert(sv == committedSnaps.sorted.dropRight(keepN))
     }
   }
 
