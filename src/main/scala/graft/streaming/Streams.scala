@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructField
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Structured Streaming twins of the batch time-series operators
   * (SURVEY.md §2.8 — extension beyond the reference surface, which has
@@ -1243,11 +1243,12 @@ object Streams {
     val log = kind.toLog(delta, batchId)
     val (dir, rows) = current match {
       // first commit: the log folded over an empty table of its columns
-      case None => (s"v$batchId", fold(kind, spark, tableDir,
+      case None => (s"v$batchId", fold(kind, spark, fs, tableDir,
         delta.select(stateFields.map(f => col(f.name)): _*).limit(0), Nil, Some(log)))
       case Some((_, id)) =>
-        val (snapId, deltaIds) = versionChain(fs, tableDir, id)
-        val base = spark.read.parquet(s"$tableDir/v$snapId")
+        val (snapId, deltaIds) =
+          versionChain(listCompleteVersions(fs, tableDir), tableDir, id)
+        val base = readVersionDir(spark, fs, s"$tableDir/v$snapId")
         // names alone are not enough: a dtype mismatch would silently
         // widen through the fold's union, changing the table's schema.
         // Types compare without nullability, which a parquet read drops.
@@ -1257,7 +1258,7 @@ object Streams {
           s"batch $batchId columns ${shape(stateFields).mkString(", ")} " +
             s"must match the table's ${shape(base.schema).mkString(", ")}")
         if (deltaIds.size + 1 < snapshotEvery) (s"d$batchId", delta)
-        else (s"v$batchId", fold(kind, spark, tableDir, base, deltaIds, Some(log)))
+        else (s"v$batchId", fold(kind, spark, fs, tableDir, base, deltaIds, Some(log)))
     }
     rows.write.mode("overwrite").parquet(s"$tableDir/$dir")
     flipCurrentPointer(spark, fs, tableDir, dir, batchId)
@@ -1277,13 +1278,13 @@ object Streams {
       complete.filter(_.startsWith("d")).map(_.drop(1).toLong))
   }
 
-  /** What version `targetId` is built from: the newest complete
-    * snapshot at or before it and the complete deltas in (snapshot,
-    * target], ascending.
+  /** What version `targetId` is built from, given the table's
+    * [[listCompleteVersions]]: the newest complete snapshot at or before
+    * it and the complete deltas in (snapshot, target], ascending.
     */
-  private def versionChain(fs: FileSystem, tableDir: String,
+  private def versionChain(versions: (Seq[Long], Seq[Long]), tableDir: String,
       targetId: Long): (Long, Seq[Long]) = {
-    val (snaps, deltas) = listCompleteVersions(fs, tableDir)
+    val (snaps, deltas) = versions
     val snapId = snaps.filter(_ <= targetId).maxOption.getOrElse(
       throw new IllegalStateException(
         s"no full snapshot at or before $targetId under $tableDir — " +
@@ -1297,10 +1298,11 @@ object Streams {
     * log. A stored delta must fold into the base's columns — a table
     * read through the other sink's reader fails here, loudly.
     */
-  private def fold(kind: TableKind, spark: SparkSession, tableDir: String,
-      base: DataFrame, deltaIds: Seq[Long], extra: Option[DataFrame]): DataFrame = {
+  private def fold(kind: TableKind, spark: SparkSession, fs: FileSystem,
+      tableDir: String, base: DataFrame, deltaIds: Seq[Long],
+      extra: Option[DataFrame]): DataFrame = {
     val logs = deltaIds.map { id =>
-      val log = kind.toLog(spark.read.parquet(s"$tableDir/d$id"), id)
+      val log = kind.toLog(readVersionDir(spark, fs, s"$tableDir/d$id"), id)
       require(log.columns.toSet == base.columns.toSet + kind.seqCol + kind.opCol,
         s"delta d$id columns ${log.columns.mkString(",")} do not fold into " +
           s"snapshot columns ${base.columns.mkString(",")} — read a CDC-log " +
@@ -1312,16 +1314,50 @@ object Streams {
       kind.keys, kind.seqCol, kind.opCol).select(base.columns.map(col): _*)
   }
 
-  /** Version `targetId`: its chain's snapshot with the deltas folded in
-    * (≤ k−1 of them under the log layout; none when it IS a snapshot).
+  /** Version `targetId` out of `versions` (the table's
+    * [[listCompleteVersions]]): its chain's snapshot with the deltas
+    * folded in (≤ k−1 of them under the log layout; none when it IS a
+    * snapshot).
     */
   private def reconstruct(kind: TableKind, spark: SparkSession,
-      fs: FileSystem, tableDir: String, targetId: Long): DataFrame = {
-    val (snapId, deltaIds) = versionChain(fs, tableDir, targetId)
+      fs: FileSystem, tableDir: String, versions: (Seq[Long], Seq[Long]),
+      targetId: Long): DataFrame = {
+    val (snapId, deltaIds) = versionChain(versions, tableDir, targetId)
     require(snapId == targetId || deltaIds.lastOption.contains(targetId),
       s"version $targetId is not a committed snapshot or delta under $tableDir")
-    fold(kind, spark, tableDir, spark.read.parquet(s"$tableDir/v$snapId"),
-      deltaIds, None)
+    fold(kind, spark, fs, tableDir,
+      readVersionDir(spark, fs, s"$tableDir/v$snapId"), deltaIds, None)
+  }
+
+  /** One complete version directory (`v<id>` or `d<id>`) as a
+    * DataFrame, its schema taken from a part file's parquet footer.
+    *
+    * Spark records the exact schema it wrote in every part file's
+    * footer (`org.apache.spark.sql.parquet.row.metadata`), and this
+    * table only ever holds Spark-written files. A parquet read without
+    * a schema would re-derive that same schema with a one-task Spark
+    * job per directory — every commit base, folded delta and read
+    * snapshot — and on an object store that job costs a footer GET
+    * from an executor besides. Reading the footer here is one small
+    * driver-side read and no job, the way table formats keep the schema
+    * in metadata instead of inferring it. A directory whose part file
+    * carries no Spark schema fails loudly: there is deliberately no
+    * fallback to inference.
+    */
+  private def readVersionDir(spark: SparkSession, fs: FileSystem,
+      dir: String): DataFrame = {
+    val part = fs.listStatus(new Path(dir)).iterator.map(_.getPath)
+      .find(_.getName.endsWith(".parquet"))
+    val json = part.flatMap { p =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, fs.getConf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally reader.close()
+    }.getOrElse(throw new IllegalStateException(
+      s"version dir $dir has no part file with a Spark schema in its " +
+        s"parquet footer (part file: ${part.fold("none")(_.getName)})"))
+    spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(dir)
   }
 
   /** Atomic `_current` flip shared by the upsert and CDC sinks:
@@ -1369,8 +1405,7 @@ object Streams {
         val in = fs.open(currentPtr)
         val line = try scala.io.Source.fromInputStream(in).mkString.trim
         finally in.close()
-        val Array(dir, id) = line.split(",")
-        return Some((dir, id.toLong))
+        return Some(parsePointer(currentPtr, line))
       } catch {
         case _: java.io.FileNotFoundException =>
           attempt += 1
@@ -1383,6 +1418,19 @@ object Streams {
     (snaps.map(id => (s"v$id", id)) ++ deltas.map(id => (s"d$id", id)))
       .maxByOption(_._2)
   }
+
+  /** `_current`'s content `dir,id`, where `dir` is `v<id>` or `d<id>`.
+    * Anything else — empty, truncated, a bad id — is a corrupt pointer:
+    * readers and the writer alike refuse it, naming the file and what
+    * it holds, rather than guess a version.
+    */
+  private def parsePointer(ptr: Path, line: String): (String, Long) =
+    line.split(",") match {
+      case Array(dir, id) if id.toLongOption.exists(n =>
+          dir == s"v$n" || dir == s"d$n") => (dir, id.toLong)
+      case _ => throw new IllegalStateException(
+        s"malformed version pointer $ptr: '$line' (expected '<v|d><id>,<id>')")
+    }
 
   /** The committed `_current` pointer for a reader (fails loudly if no
     * batch has committed yet). Tolerates a concurrent pointer flip via
@@ -1417,7 +1465,10 @@ object Streams {
   private def readCurrent(kind: TableKind, spark: SparkSession,
       tableDir: String): DataFrame = {
     val fs = tableFs(spark, tableDir)
-    reconstruct(kind, spark, fs, tableDir, committedPointer(fs, tableDir)._2)
+    // pointer before listing: every version it names is then listed
+    val pointerId = committedPointer(fs, tableDir)._2
+    reconstruct(kind, spark, fs, tableDir, listCompleteVersions(fs, tableDir),
+      pointerId)
   }
 
   /** TIME TRAVEL: read the state as of a specific committed batchId —
@@ -1434,14 +1485,15 @@ object Streams {
       tableDir: String, batchId: Long): DataFrame = {
     val fs = tableFs(spark, tableDir)
     val pointerId = committedPointer(fs, tableDir)._2
-    val (snaps, deltas) = listCompleteVersions(fs, tableDir)
+    val versions = listCompleteVersions(fs, tableDir)
+    val (snaps, deltas) = versions
     val committed = (snaps.map(id => (id, s"v$id")) ++ deltas.map(id => (id, s"d$id")))
       .filter(_._1 <= pointerId).sorted
     if (!committed.exists(_._1 == batchId))
       throw new IllegalArgumentException(
         s"no committed batch v$batchId under $tableDir " +
           s"(available: ${committed.map(_._2).mkString(", ")})")
-    reconstruct(kind, spark, fs, tableDir, batchId)
+    reconstruct(kind, spark, fs, tableDir, versions, batchId)
   }
 
   /** Retention for the versioned pointer-flipped table (r16 verdict

@@ -358,6 +358,39 @@ class MaintenanceSpec extends SparkSpec {
     Streams.readCdcTable(spark, _, Seq("k")),
     Streams.readCdcTableVersion(spark, _, _, Seq("k")))
 
+  // the cdc kind's key/op pattern over a payload of decimal, timestamp,
+  // struct and array columns, some declared non-null — the schema every
+  // version dir's footer must carry exactly
+  private def nestedCdcKind = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("amt", DecimalType(12, 2), nullable = false),
+      StructField("at", TimestampType),
+      StructField("attrs", StructType(Seq(StructField("tier", StringType),
+        StructField("score", DoubleType, nullable = false)))),
+      StructField("tags", ArrayType(StringType, containsNull = false)),
+      StructField("seq", LongType, nullable = false),
+      StructField("op", StringType, nullable = false)))
+    SinkKind("cdc_nested",
+      (0 until 8).map { i =>
+        val op = if (i == 0) "I" else "U"
+        def row(k: Long, seq: Long, op: String) = Row(k,
+          java.math.BigDecimal.valueOf(1000L * i + k, 2),
+          if (i % 2 == 0) at(i) else null,
+          Row(if (k == 4L) null else s"t$i", i * 1.5),
+          (0 to i % 3).map(j => s"g$j"), seq, op)
+        spark.createDataFrame(Seq(
+          row(1L + i % 3, 10L * i + 1, if (i % 4 == 3) "D" else op),
+          row(4L, 10L * i + 2, op)).asJava, schema)
+      },
+      Streams.applyCdcBatch(_, _, _, Seq("k"), _),
+      Streams.readCdcTable(spark, _, Seq("k")),
+      Streams.readCdcTableVersion(spark, _, _, Seq("k")))
+  }
+
   /** `kind`'s batches replayed into a full-snapshot table and a
     * snapshotEvery=3 log-structured one.
     */
@@ -372,7 +405,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("log-structured upsert layout: reads bit-identical to the full-snapshot layout at every version") {
     // both sinks run on one versioned-table core; pin each kind
-    Seq(upsertKind, cdcKind).foreach { kind =>
+    Seq(upsertKind, cdcKind, nestedCdcKind).foreach { kind =>
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_log_${kind.name}").toString
       val (full, logT) = buildTwinLayouts(dir, kind)
@@ -392,6 +425,12 @@ class MaintenanceSpec extends SparkSpec {
         same(kind.readVersion(logT, i.toLong), kind.readVersion(full, i.toLong),
           s"version $i")
       }
+      // reads take each version dir's schema from its parquet footer: it
+      // must equal what a schema-inferring read derives, nullability too
+      (0 until 8).foreach { i =>
+        assert(kind.readVersion(full, i.toLong).schema ==
+          spark.read.parquet(s"$full/v$i").schema, s"${kind.name} v$i: footer schema")
+      }
       // idempotent replay: an already-applied batch is a no-op
       kind.apply(kind.batches(2), 2L, logT, 3)
       assert(dirNames(logT).size == 8)
@@ -400,7 +439,81 @@ class MaintenanceSpec extends SparkSpec {
       assert(new java.io.File(s"$logT/_current").delete())
       kind.apply(kind.batches(7), 7L, logT, 3)
       same(kind.read(logT), kind.read(full), "current after the repair")
+      // a zero-row batch still commits, as a delta (d8) and as a snapshot
+      // (v9): Spark writes one empty part file carrying the footer schema
+      val empty = kind.batches(0).limit(0)
+      kind.apply(empty, 8L, logT, 3)
+      kind.apply(empty, 9L, logT, 3)
+      assert(Set("d8", "v9").subsetOf(dirNames(logT)), s"${kind.name}: ${dirNames(logT)}")
+      Seq(8L, 9L).foreach { v =>
+        same(kind.readVersion(logT, v), kind.read(full), s"empty batch $v")
+      }
+      same(kind.read(logT), kind.read(full), "current after the empty batches")
     }
+  }
+
+  test("building a read of a log-layout table runs no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_no_job").toString
+    val (up, cdc) = (s"$dir/upsert", s"$dir/cdc")
+    (0 until 2).foreach { i =>
+      upsertKind.apply(upsertKind.batches(i), i.toLong, up, 3)
+      cdcKind.apply(cdcKind.batches(i), i.toLong, cdc, 3)
+    }
+    assert(dirNames(up) == Set("v0", "d1") && dirNames(cdc) == Set("v0", "d1"))
+    // count only the jobs this thread starts (a local property rides
+    // along on every job it submits)
+    val tag = "graft.spec.readJobProbe"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.ListenerBus.flush(spark)
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(tag, "1")
+    val reads = try
+      Seq(Streams.readUpsertTable(spark, up), Streams.readCdcTable(spark, cdc, Seq("k"))) ++
+        Seq(0L, 1L).flatMap(v => Seq(Streams.readUpsertTableVersion(spark, up, v),
+          Streams.readCdcTableVersion(spark, cdc, v, Seq("k"))))
+    finally {
+      spark.sparkContext.setLocalProperty(tag, null)
+      org.apache.spark.sql.graft.ListenerBus.flush(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"${jobs.get} Spark job(s) ran while building the reads")
+    assert(reads.forall(_.count() > 0))
+  }
+
+  test("a malformed _current pointer fails loudly on the read and the commit path, naming it") {
+    val table = java.nio.file.Files.createTempDirectory("graft_bad_ptr").toString + "/table"
+    def batch(i: Int) = Seq(Ev(i + 1L, at(i), 100L, "click", i.toDouble)).toDF()
+    Streams.applyUpsertBatch(batch(0), 0L, table)
+    val fs = hadoopFs(table)
+    def writePointer(content: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(table, "_current"), true)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+    // empty, truncated, a bad id, a dir that disagrees with the id
+    Seq("", "v0", "v0,", "v0,x", "v1,0", "garbage").foreach { content =>
+      writePointer(content)
+      Seq[(String, () => Any)](
+        "readUpsertTable" -> (() => Streams.readUpsertTable(spark, table)),
+        "readUpsertTableVersion" -> (() => Streams.readUpsertTableVersion(spark, table, 0L)),
+        "applyUpsertBatch" -> (() => Streams.applyUpsertBatch(batch(1), 1L, table)),
+        "vacuumVersions" -> (() => Streams.vacuumVersions(spark, table, keepN = 1))
+      ).foreach { case (path, run) =>
+        val e = intercept[IllegalStateException](run())
+        assert(e.getMessage.contains(s"$table/_current") &&
+          e.getMessage.contains(s"'$content'"), s"$path on '$content': ${e.getMessage}")
+      }
+    }
+    // nothing was committed or deleted meanwhile, and once the pointer is
+    // repaired the next batch commits
+    assert(dirNames(table) == Set("v0"))
+    writePointer("v0,0")
+    Streams.applyUpsertBatch(batch(1), 1L, table)
+    assert(Streams.readUpsertTable(spark, table)
+      .select("event_id").as[Long].collect().toSeq == Seq(2L))
   }
 
   test("upsert commits refuse a null user_id or a changed schema: as batch 0, as a delta, as a snapshot") {
