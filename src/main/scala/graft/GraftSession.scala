@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Opinionated SparkSession factory encoding the engine's scale
-  * defaults. The driver harness builds its own sessions (Verify/Bench
-  * pin the contract config); this is the front door for library users.
+  * defaults. It is the front door for library users and the one base of
+  * every session in this repo (Bench, Verify, the specs, the tools and
+  * perfbench), which add only master, partition, UI and path settings.
   *
   * Config rationale, sized for the 100 TB deployment this engine
   * targets (values are per-job starting points, not magic):
@@ -20,7 +21,11 @@ import org.apache.spark.sql.SparkSession
   *  - `parquet.filterPushdown` + `columnarReaderBatchSize` defaults:
   *    the scan-side wins are already on; never disable them.
   *  - Extensions: registers graft's native SQL functions
-  *    (vector_dot_scaled, simhash64) via [[GraftExtensions]].
+  *    (vector_dot_scaled, simhash64, ...) via [[GraftExtensions]].
+  *
+  * Library operators never write session config; every setting they
+  * rely on is here. A caller's own `.config(...)` after `builder()`
+  * still wins.
   */
 object GraftSession {
 
@@ -39,6 +44,11 @@ object GraftSession {
       // joins on the bucket key skip BOTH the exchange and the sort
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // NearDup's broadcast regime builds the multi-shuffle PPJoin prefix
+      // INSIDE the broadcast exchange, which must beat this timeout; on a
+      // slow or contended cluster the 300 s default surfaces as an opaque
+      // broadcast-timeout failure
+      .config("spark.sql.broadcastTimeout", "1800")
 
   /** Local development/test session: shuffle partitions = cores. */
   def local(cores: Int): SparkSession = {

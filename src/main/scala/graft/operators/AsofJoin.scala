@@ -165,7 +165,7 @@ object AsofJoin {
     * [[org.apache.spark.sql.graft.MultiLastAsof]] window function over
     * ONE window partitioned by the `by` keys: a single Window operator
     * over a single sort after a SINGLE hash exchange of |L| + Σ|Rᵢ|
-    * rows, independent of k (plan-pinned in ExplainAudit and the spec).
+    * rows, independent of k (plan-pinned in ExplainAuditSpec and the spec).
     *
     * The packed kernel also makes the pass CPU-flat in k (round 15;
     * STRESS.md): its buffer holds all k running last-match slots and

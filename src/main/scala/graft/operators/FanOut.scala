@@ -14,7 +14,7 @@ import org.apache.spark.sql.DataFrame
   * immediately after the read, so the heavy per-row work lands above a
   * cheap exchange of the raw bytes and parallelizes.
   *
-  * Measured (tools/NoveltyProbe, sf0.1, local[32], same-JVM ABAB):
+  * Measured (OPTIMIZATION_r19.md §3, sf0.1, local[32], same-JVM ABAB):
   * text_ngram_novelty 4.61 s with the 1-task scan vs 1.05 s fanned out
   * — the tokenize+explode stage was the query, and it was serial.
   *

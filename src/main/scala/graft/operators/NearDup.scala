@@ -391,15 +391,6 @@ object NearDup {
       // inflated estimate vs budget: see BroadcastInflation
       BroadcastInflation * math.max(prefixBytesEst, 2.0 * ghBytesEst) <= budget
     }
-    if (broadcastRegime) {
-      // the multi-shuffle prefix build runs INSIDE the broadcast
-      // exchange and must beat spark.sql.broadcastTimeout; on a slow or
-      // contended cluster the 300 s default surfaces as an opaque
-      // broadcast-timeout failure, so raise it (only when still at the
-      // default — an explicit user setting wins)
-      if (spark.conf.get("spark.sql.broadcastTimeout", "300") == "300")
-        spark.conf.set("spark.sql.broadcastTimeout", "1800")
-    }
 
     val probeSide = prefix.select(col("gram"), col("id").as("a"),
       col("sz").as("sa"), col("rn").as("ra"))
@@ -409,10 +400,10 @@ object NearDup {
     // expansionWidth (Σ_gram df_prefix² orientation rows at ~56 B).
     // In the broadcast branch the multi-shuffle prefix build runs
     // INSIDE the broadcast exchange — bounded because the regime gate
-    // caps the prefix at the broadcast budget, and the timeout is
-    // raised from its 300 s default above. An eager prefix.count()
-    // pre-fill was measured at +70% whole-query time at 32× stress
-    // (one full extra pass) and rejected.
+    // caps the prefix at the broadcast budget, and GraftSession raises
+    // spark.sql.broadcastTimeout from its 300 s default. An eager
+    // prefix.count() pre-fill was measured at +70% whole-query time at
+    // 32× stress (one full extra pass) and rejected.
     lazy val pairWidth = expansionWidth(prefix, Seq("gram"), bytesPerRow = 56)
     val joined =
       if (broadcastRegime) {

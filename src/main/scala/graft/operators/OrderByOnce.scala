@@ -27,7 +27,7 @@ import org.apache.spark.storage.StorageLevel
   * persist, NOT localCheckpoint: a persisted plan keeps its lineage
   * (block loss recomputes instead of failing the job — the caveat that
   * makes localCheckpoint single-box-only) and keeps the child plan
-  * visible to explain/ExplainAudit, so every scan/window/pushdown pin
+  * visible to explain/ExplainAuditSpec, so every scan/window/pushdown pin
   * still sees the real tree. At scale the trade is one
   * materialization of the output frame (spilling to disk past memory)
   * against re-running the output-producing stage — a win whenever that
@@ -40,7 +40,7 @@ import org.apache.spark.storage.StorageLevel
   * double-execution to remove and the barrier would only add a full
   * materialization of the pre-limit frame.
   *
-  * Measured (tools/SortProbe, sf0.1, local[32], same-JVM passes):
+  * Measured (OPTIMIZATION_r18.md §3, sf0.1, local[32], same-JVM passes):
   * rolling-zscore noop-sink min 2.37 s as declared vs 1.05 s through
   * this barrier; the no-sort body alone is 1.14 s — the barrier
   * removes virtually the whole double-execution.

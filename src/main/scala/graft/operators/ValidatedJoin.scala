@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * is byte-for-byte the distribution a sort-merge join already
   * requires, so Catalyst reuses the exchange and the check rides the
   * shuffle the join pays anyway — zero extra passes over the data
-  * (ExplainAudit pins the single-exchange-per-side shape). The
+  * (ExplainAuditSpec pins the single-exchange-per-side shape). The
   * `raise_error` fires lazily at action time from whichever executor
   * meets a violating row, carrying the first offending key.
   */

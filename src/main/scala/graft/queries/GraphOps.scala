@@ -278,9 +278,9 @@ object GraphOps {
     // optimization, guide §3.1/§1.1). The edge-row form hashed every
     // wedge's (a, b) into a two-long-key UnsafeHashedRelation of the
     // whole edge set — 41 M random probes into a ~60 MB relation, each
-    // a multi-miss pointer chase; TriProbe measured the closing join at
-    // ~3 s of the query's 3.3 s. Joining on `a` ALONE against the
-    // per-node out-neighbor lists (|V| rows, not |E|) makes the
+    // a multi-miss pointer chase; the closing join measured ~3 s of the
+    // query's 3.3 s (OPTIMIZATION_r19.md §7). Joining on `a` ALONE
+    // against the per-node out-neighbor lists (|V| rows, not |E|) makes the
     // relation a single-long-key lookup into a cache-resident table,
     // and the b ∈ N⁺(a) test a sequential scan of one short primitive
     // array (out-degree is O(√m) by orientation): 3.3 s → 0.6 s
@@ -902,10 +902,10 @@ object GraphOps {
           greatest(size(col("__ns")) - col("__i") - 1, lit(0)))).as("b"))
     // THE AGGREGATE'S PARALLELISM IS DERIVED FROM THE WEDGE VOLUME, not
     // from spark.sql.shuffle.partitions (r19 optimization, guide §2.2 +
-    // §5). Measured at bench scale (tools/RaProbe, sf0.1): 148 M wedges
-    // collapse to 101 M distinct pairs, so at partitions = cores the
-    // map-side partial aggregate collapses only 1.46:1 while its hash
-    // map — and the final aggregate's, at ~4.6 M groups per task —
+    // §5). Measured at bench scale (OPTIMIZATION_r19.md §7, sf0.1):
+    // 148 M wedges collapse to 101 M distinct pairs, so at partitions =
+    // cores the map-side partial aggregate collapses only 1.46:1 while
+    // its hash map — and the final aggregate's, at ~4.6 M groups per task —
     // blows past a task's execution-memory share and spills 29 GB; the
     // aggregate ran 13.5-16.3 s. Hash-repartitioning the raw 24-byte
     // wedge rows by the GROUP KEYS first (one exchange the groupBy then

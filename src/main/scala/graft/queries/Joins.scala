@@ -503,7 +503,7 @@ object Joins {
     * duplicate key. The multiplicity window shuffles only the small
     * unique side; the fact side stays exchange-free and the join itself
     * is broadcast — so the safety check costs one hash shuffle of the
-    * DIMENSION, never a pass over the facts (ExplainAudit pins that
+    * DIMENSION, never a pass over the facts (ExplainAuditSpec pins that
     * shape). Since validation passes on this data, the oracle is the
     * plain equi-join.
     */

@@ -59,7 +59,7 @@ object Scans {
 
   /** One-day slice of a date-partitioned directory tree. The filter on
     * the partition column must become `PartitionFilters` on the scan
-    * (asserted in ExplainAudit): at 100 TB this is the difference
+    * (asserted in ExplainAuditSpec): at 100 TB this is the difference
     * between listing+reading 1 directory and the whole table.
     */
   def scanHivePartitioned(spark: SparkSession, sfDir: String): DataFrame = {

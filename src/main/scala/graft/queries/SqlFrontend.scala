@@ -136,7 +136,7 @@ object SqlFrontend {
     // after the order date. The correlated EXISTS is the point — the
     // fixture proving Catalyst decorrelates it into a left-semi join
     // (RewriteCorrelatedScalarSubquery/RewritePredicateSubquery) rather
-    // than executing a per-row subquery; ExplainAudit asserts the plan.
+    // than executing a per-row subquery; ExplainAuditSpec asserts the plan.
     """SELECT o_orderpriority, count(*) AS order_count
       |FROM orders
       |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -164,7 +164,7 @@ object SqlFrontend {
     // the SAME single IEEE division — a bare avg() would accumulate
     // doubles in engine-specific order). The correlated scalar subquery
     // must decorrelate into an aggregate-then-join, not per-row
-    // execution; ExplainAudit asserts no subquery survives the plan.
+    // execution; ExplainAuditSpec asserts no subquery survives the plan.
     // The global price sum emits via dsumExact's scaled-BIGINT form —
     // a bare decimal→double cast double-rounds in DuckDB past 2^53
     // (the sf1-sweep bug class; per-partkey sums in the subquery are
@@ -233,7 +233,7 @@ object SqlFrontend {
     // aggregate over lineitem keyed on the derived table's columns.
     // Catalyst must decorrelate the scalar into a per-(partkey, suppkey)
     // aggregate joined back and turn both INs into semi joins — no
-    // subquery may survive to execution (ExplainAudit asserts).
+    // subquery may survive to execution (ExplainAuditSpec asserts).
     // Arithmetic is exact: l_quantity is integer-valued, so sum(...)
     // ×0.5 and max(...)×5.0 are exactly representable doubles and the
     // comparison is engine-portable with no decimal emission needed.
@@ -308,7 +308,7 @@ object SqlFrontend {
     // over a 4-table join (ps × supplier × nation × region) keyed on
     // the outer part, the last classic TPC-H decorrelation the frontend
     // hadn't exercised: Catalyst must rewrite it to a per-partkey
-    // aggregate of the shared CTE joined back (ExplainAudit asserts the
+    // aggregate of the shared CTE joined back (ExplainAuditSpec asserts the
     // executed plan is subquery-free). All compared/emitted values are
     // raw parquet doubles or exact mins of them — no rounding, so the
     // cost equality is engine-portable bit-for-bit.
@@ -387,7 +387,7 @@ object SqlFrontend {
     // TPC-H Q18: IN over a grouped HAVING — the semi-join-against-
     // aggregate shape. Catalyst must plan the subquery as an aggregate
     // feeding a (left-semi) join on l_orderkey, never a per-row
-    // re-aggregation; ExplainAudit asserts the executed plan is
+    // re-aggregation; ExplainAuditSpec asserts the executed plan is
     // subquery-free. l_quantity is integer-valued, so the sums are
     // exact doubles and the >300 comparison is engine-portable (fixture
     // order totals reach 458, p99 ≈ 262, so the threshold selects a
@@ -427,7 +427,7 @@ object SqlFrontend {
     // (a) keep the join equi on p_partkey = l_partkey (no BNLJ /
     // cartesian), and (b) push the per-side OR-residuals
     // (`extractPredicatesWithinOutputSet`) down to both scans so the
-    // parquet reader prunes before the join; ExplainAudit asserts both.
+    // parquet reader prunes before the join; ExplainAuditSpec asserts both.
     s"""SELECT ${util.dsumExactSql("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
       | count(*) AS n_items
       |FROM lineitem

@@ -593,7 +593,7 @@ object TrainPrep {
     * k. The plan is the scale story: the rank-filter compiles to
     * WindowGroupLimit, so every partition keeps only its local top-k
     * candidates BEFORE the shuffle — a per-group reservoir, not a full
-    * per-group sort (ExplainAudit asserts the pushdown). The classic
+    * per-group sort (ExplainAuditSpec asserts the pushdown). The classic
     * distributed-reservoir alternative (mapPartitions + RNG state) loses
     * reproducibility across partition layouts; hash-rank is the same
     * sample every run on every cluster shape.

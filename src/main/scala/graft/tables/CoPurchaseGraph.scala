@@ -26,7 +26,7 @@ import graft.operators.Bucketing
   *    k-core's frontier decrement) and PageRank's out-degree aggregate
   *    groups by `src`, so the edge side of all of them plans with ZERO
   *    Exchange — the per-iteration shuffle of the BIG side becomes a
-  *    one-time write-side cost (plan-asserted in ExplainAudit and
+  *    one-time write-side cost (plan-asserted in ExplainAuditSpec and
   *    CoPurchaseGraphSpec);
   *  - a second tiny table (pk, n_orders) carries each part's order
   *    count — the Jaccard denominators, which are NOT derivable from

@@ -29,9 +29,11 @@ final class Tables(spark: SparkSession, sfDir: String) {
     * footer type so either generation loads to the same session-tz
     * TimestampType column (session tz is UTC, so the NTZ cast is
     * value-preserving and matches DuckDB's naive reading bit-for-bit).
+    * A NANOS-encoded file relies on [[graft.GraftSession]]'s
+    * `spark.sql.legacy.parquet.nanosAsLong`; this loader writes no
+    * session config.
     */
   def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     val raw = t("events")

@@ -7,8 +7,9 @@ import java.util.concurrent.atomic.AtomicLong
   * through the noop sink with per-query stage metrics — memory/disk
   * spill, shuffle bytes written/read, summed executor task time — from
   * a stage listener, so "where does the time go" is answered from data
-  * (the RaProbe device generalized to the whole suite; it found the
-  * 29 GB aggregate spill behind graph_resource_alloc's 15 s).
+  * (it generalizes the per-query decomposition that found the 29 GB
+  * aggregate spill behind graph_resource_alloc's 15 s,
+  * OPTIMIZATION_r19.md §7).
   *
   *   SPARK_GRAFT_CPUS=32 runMain graft.tools.QueryProbe <query> [query…] [sfDir]
   */

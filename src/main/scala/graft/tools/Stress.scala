@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Ann, NearDup}
 
@@ -104,7 +103,7 @@ object Stress {
     // cell size ≈ corpus/nCentroids stays ~constant, so probe cost does
     val nCentroids = math.max(16, math.min(512, 16 * replicas))
     val nPlanes = math.min(16, 6 + (31 - Integer.numberOfLeadingZeros(math.max(1, replicas))))
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = graft.GraftSession.builder().master("local[32]")
       // Shuffle width is NOT hand-tuned per scale: AQE starts every
       // shuffle at 1024 partitions and coalesces down to the advisory
       // size (64 MB), so partitions stay memory-sized as the corpus

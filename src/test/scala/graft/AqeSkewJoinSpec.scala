@@ -11,19 +11,11 @@ import org.apache.spark.sql.functions._
   * forces a shuffle join, and asserts the split actually happened (the
   * executed SMJ node carries `skew=true`) and that it changes no rows.
   * Thresholds are the production defaults scaled to spec data size
-  * (256 MB→2 MB, 64 MB→1 MB); `graft.tools.SkewJoinDemo` runs the same
-  * shape at stress scale with the UNSCALED defaults (see STRESS.md).
+  * (256 MB→2 MB, 64 MB→1 MB); the same shape at stress scale with the
+  * UNSCALED defaults is recorded in STRESS.md ("AQE skew-join
+  * demonstration").
   */
 class AqeSkewJoinSpec extends SparkSpec {
-
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 
   // half the fact rows share key 0; payload is md5 hex so compressed map
   // sizes (what AQE measures) stay within ~2x of the logical bytes

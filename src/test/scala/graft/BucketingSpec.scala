@@ -22,24 +22,23 @@ class BucketingSpec extends SparkSpec {
       // fixture tables are broadcast-small, which would bypass the
       // bucketed path entirely; disable broadcast to plan the join the
       // way two 100 TB fact tables would
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.coLocatedJoin(spark, "b_orders", "b_lineitem", "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must not shuffle either side:\n$plan")
-      // bucket pruning/format must not change the answer (decimal sums:
-      // a double sum's low bits depend on partition merge order, which
-      // bucketing legitimately changes)
-      def summary(df: org.apache.spark.sql.DataFrame) = df
-        .agg(count(lit(1)),
-          sum(col("l_quantity").cast("decimal(38,8)")),
-          sum(col("o_totalprice").cast("decimal(38,8)")))
-        .collect().toSeq
-      assert(summary(joined) == summary(orders.join(lineitem, "o_orderkey")))
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+        val joined = Bucketing.coLocatedJoin(spark, "b_orders", "b_lineitem", "o_orderkey")
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"),
+          s"bucketed join must not shuffle either side:\n$plan")
+        // bucket pruning/format must not change the answer (decimal sums:
+        // a double sum's low bits depend on partition merge order, which
+        // bucketing legitimately changes)
+        def summary(df: org.apache.spark.sql.DataFrame) = df
+          .agg(count(lit(1)),
+            sum(col("l_quantity").cast("decimal(38,8)")),
+            sum(col("o_totalprice").cast("decimal(38,8)")))
+          .collect().toSeq
+        assert(summary(joined) == summary(orders.join(lineitem, "o_orderkey")))
+      }
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }
@@ -58,23 +57,22 @@ class BucketingSpec extends SparkSpec {
     try {
       Bucketing.writeBucketed(c, "b_snap_old", "c_custkey", 8)
       Bucketing.writeBucketed(newSnap, "b_snap_new", "c_custkey", 8)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val diff = graft.operators.SnapshotDiff.diff(
-        spark.table("b_snap_old"), spark.table("b_snap_new"),
-        Seq("c_custkey"), Seq("c_acctbal", "c_mktsegment"))
-      val plan = diff.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed snapshot diff must not shuffle either snapshot:\n$plan")
-      // and the classification is identical to the unbucketed diff
-      val expect = graft.operators.SnapshotDiff
-        .diff(c, newSnap, Seq("c_custkey"), Seq("c_acctbal", "c_mktsegment"))
-        .orderBy("c_custkey").collect().toSeq
-      assert(diff.orderBy("c_custkey").collect().toSeq == expect)
-      assert(expect.nonEmpty, "fixture must actually produce changes")
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+        val diff = graft.operators.SnapshotDiff.diff(
+          spark.table("b_snap_old"), spark.table("b_snap_new"),
+          Seq("c_custkey"), Seq("c_acctbal", "c_mktsegment"))
+        val plan = diff.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"),
+          s"bucketed snapshot diff must not shuffle either snapshot:\n$plan")
+        // and the classification is identical to the unbucketed diff
+        val expect = graft.operators.SnapshotDiff
+          .diff(c, newSnap, Seq("c_custkey"), Seq("c_acctbal", "c_mktsegment"))
+          .orderBy("c_custkey").collect().toSeq
+        assert(diff.orderBy("c_custkey").collect().toSeq == expect)
+        assert(expect.nonEmpty, "fixture must actually produce changes")
+      }
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS b_snap_old")
       spark.sql("DROP TABLE IF EXISTS b_snap_new")
     }

@@ -89,15 +89,13 @@ class CoPurchaseGraphSpec extends SparkSpec {
       .join(ed.select(col("src"), col("dst").as("b")), "src")
       .filter(col("a") < col("b"))
     // fixture is broadcast-small which would bypass the bucketed path;
-    // force the big-big plan two 100 TB edge tables would get
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    // one-file-per-bucket sort order stopped propagating by default in
-    // Spark 3.1 (listing cost); the opt-in flag restores it — the
-    // writeBucketed single-file-per-bucket layout is what makes the
-    // flag USABLE (multi-file buckets have no global per-bucket order)
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    try {
+    // force the big-big plan two 100 TB edge tables would get. The sort
+    // order survives because GraftSession ships
+    // spark.sql.legacy.bucketedTableScan.outputOrdering (off by default
+    // since Spark 3.1): the writeBucketed single-file-per-bucket layout
+    // is what makes it usable, so this pins the shipped config's plan
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       wedges.write.format("noop").mode("overwrite").save()
       val plan = wedges.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
@@ -106,10 +104,6 @@ class CoPurchaseGraphSpec extends SparkSpec {
         s"wedge join shuffled an edge side:\n$plan")
       assert(!plan.contains("Sort "),
         s"wedge join re-sorted a sorted bucket:\n$plan")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
     }
   }
 

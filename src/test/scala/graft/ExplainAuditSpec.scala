@@ -1,18 +1,13 @@
-package graft.tools
-
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+package graft
 
 /** Physical-plan audit: asserts the load-bearing plan properties that
   * make queries viable at 100 TB — filters reaching the parquet scan,
   * projections pruned, small sides broadcast, top-k never sorting the
-  * world, aggregates partial+final. Run after any query change:
-  *
-  *   runMain graft.tools.ExplainAudit [sfDir]
-  *
-  * Exits non-zero if any assertion fails.
+  * world, aggregates partial+final. One test per audited query, run on
+  * the shared (shipped) session at sf0.001, the scale the checks were
+  * written for.
   */
-object ExplainAudit {
+class ExplainAuditSpec extends SparkSpec {
 
   /** (query, all-of-these-appear, none-of-these-appear) over the
     * formatted physical plan.
@@ -830,176 +825,158 @@ object ExplainAudit {
     ("ts_cusum_alarm", Seq("Window"),
       Seq("Join", "CartesianProduct", "HashAggregate", "Generate")))
 
-  def main(args: Array[String]): Unit = {
-    val isDump = args.length >= 2 && args(0) == "--dump"
-    val sfDir = (if (isDump) args.lift(2) else args.headOption)
-      .getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  // node-count caps: substring presence can't catch "the plan has N of
+  // these where 1 suffices" regressions (e.g. a per-sum window spec
+  // drift exploding one Window into five sorted Windows)
+  private val maxOccur: Map[String, Seq[(String, Int)]] = Map(
+    "window_rolling_corr" -> Seq(("Window ", 1), ("Sort ", 2)),
+    "agg_corr_matrix" -> Seq(("FileScan ", 1), ("HashAggregate", 2)),
+    "agg_cov_matrix" -> Seq(("FileScan ", 1), ("HashAggregate", 2)),
+    "agg_grouping_sets" -> Seq(("FileScan ", 1), ("Expand", 1)),
+    // exactly 2 hash shuffles: the uniqueness window over the small
+    // dimension + the final groupBy — the orders fact side reaches
+    // the broadcast join with NO exchange of its own
+    "join_validated" -> Seq(("Exchange hashpartitioning", 2)),
+    "snapshot_diff" -> Seq(("Exchange hashpartitioning", 2)),
+    "agg_weighted_median" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 2)),
+    // exactly ONE hash shuffle: the fold aggregate over the union —
+    // any second exchange means the partial-agg collapse regressed
+    "merge_cdc_apply" -> Seq(("Exchange hashpartitioning", 1)),
+    // ONE keyed exchange for ALL feature streams (backwardMulti: the
+    // k running lasts share a single window over a single union) — a
+    // second exchange means the chained-per-stream form crept back
+    "join_pit_features" -> Seq(("Exchange hashpartitioning", 1),
+      ("Window ", 1), ("Sort ", 2)),
+    // ONE scan of the event log, window + item agg = exactly 2 hash
+    // exchanges — a self-join/as-of formulation would add scans
+    "event_attribution" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 2)),
+    // the two series union into ONE window exchange — a join
+    // formulation would re-key per side
+    "join_merge_ordered" -> Seq(("FileScan ", 2),
+      ("Exchange hashpartitioning", 1)),
+    "sample_kfold" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 1)),
+    // QI-tuple agg + histogram agg: two shuffles, one scan
+    "dq_k_anonymity" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 2)),
+    // one keyed exchange per side of the full-outer join, nothing else
+    "join_combine_first" -> Seq(("Exchange hashpartitioning", 2),
+      ("SortMergeJoin", 1)),
+    // one scan, one keyed exchange, one window
+    "window_rolling_wma" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    // the user_id aggregate reuses the window's partitioning — a
+    // second hash exchange means the reuse regressed
+    "ts_time_weighted_avg" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    // exactly the two DOMAIN distinct aggregates hash-shuffle (tiny
+    // sides); the fact scan feeds the broadcast joins directly, so
+    // the fact side pays zero exchanges
+    "encode_label_factorize" -> Seq(("Exchange hashpartitioning", 2)),
+    "agg_idxmax" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 1)),
+    // one scan, one keyed exchange: the five moments ride one aggregate
+    "agg_group_ols" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 1)),
+    // ONE corpus scan (stats side reuses the per-doc exchange) — a
+    // second FileScan means the tokenize pass stopped being shared.
+    // cap 2 on the exchange STRING: the ReusedExchange node's label
+    // echoes "Exchange hashpartitioning(...)" for the one real shuffle
+    "text_bm25_topk" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 2)),
+    "dq_skew_profile" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 2)),
+    // the token-table layout's whole point: df aggregate + tf-df join
+    // ride the tok bucketing with NO exchange — the only hash shuffle
+    // is the per-doc top-k window
+    "text_tfidf_table" -> Seq(("Exchange hashpartitioning", 1)),
+    // ONE documents scan: the persisted (doc, word) frame serves both
+    // the vocabulary encode and the count join — a second FileScan
+    // means tokenization is being paid twice again
+    "text_token_count_bpe" -> Seq(("FileScan ", 1)),
+    "pack_sequences_bpe" -> Seq(("FileScan ", 1)),
+    // one orders scan + one customer scan: the three metrics' ranks,
+    // the fence aggregate and the scoring join all ride ONE percust
+    // reduce (the r15 ADVICE fix — the old form scanned orders 4x)
+    "seg_rfm" -> Seq(("FileScan ", 2)),
+    // the two-rank tie-average identity keeps all four rank windows
+    // AND the co-moment aggregate on one group exchange — a
+    // per-(group,value) count formulation would add a second
+    "agg_spearman" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 1)),
+    // one scan, one keyed exchange, one window carrying all four sums
+    "window_rolling_skew" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    "window_rolling_kurt" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    // the user_id aggregate reuses the lag window's partitioning
+    "window_autocorr" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    // one scan, one keyed exchange — OHLC is a single aggregate
+    "ts_resample_ohlc" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1)),
+    // fence side + fact side each scan customer once; the fence
+    // window and the final segment aggregate are the two exchanges
+    "transform_winsorize" -> Seq(("FileScan ", 2),
+      ("Exchange hashpartitioning", 2)),
+    "encode_quantile_uniform" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    // the whole point: the fact join itself is exchange-free, so the
+    // ONLY hash exchange is the post-join priority aggregate
+    "join_bucketed_facts" -> Seq(("Exchange hashpartitioning", 1)),
+    // one scan, one keyed exchange, one window (rolling-median shape)
+    "window_rolling_quantile" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    // peak/dd/mdd stack over ONE exchange; the dependent second
+    // window pass shares the first's sort (Sort cap 2 = one window
+    // sort + the declared output ORDER BY's range sort, NOT a window
+    // re-sort — Window cap 2 pins the two-pass structure itself)
+    "window_drawdown" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Sort ", 2), ("Window ", 2)),
+    // the gap aggregate reuses the lag window's partitioning
+    "ts_gap_stats" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    "dedup_flag_duplicates" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    // the segment aggregate reuses the rank window's partitioning
+    "agg_gini" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    // the lag-unroll rolling family: all lags share ONE window over
+    // ONE keyed exchange — a second Window means the specs diverged
+    "window_rolling_prod" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    "window_rolling_rank" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    "window_rolling_nunique" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    "window_rolling_idxmax" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    "window_expanding_corr" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 1)),
+    // four weighted prefix sums + the row_number weight share the
+    // mean kernel's single exchange; Window 2 = weight pass + sums
+    "window_ewm_var" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Window ", 2)),
+    // ONE scan, ONE grouped exchange carrying all co-moments
+    "agg_corrwith" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1)),
+    "agg_ab_ttest" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1)),
+    // daily aggregate + lag window = exactly 2 keyed exchanges
+    "ts_dod_change" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 2), ("Window ", 1)),
+    "agg_weighted_mean" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1)),
+    // one keyed exchange for the deque layout + one range exchange
+    // for the declared order — a second hash exchange would mean the
+    // kernel lost its single-layout guarantee
+    "window_rolling_minmax_wide" -> Seq(("FileScan ", 1),
+      ("Exchange hashpartitioning", 1), ("Exchange rangepartitioning", 1)))
 
-    // --dump <query>: print the full formatted plan and exit
-    if (isDump) {
-      val df = SparkEntry.queries(args(1))(spark, sfDir)
-      df.collect()
-      println(s"wholeStage codegen enabled: ${spark.conf.get("spark.sql.codegen.wholeStage")}")
-      println(df.queryExecution.executedPlan.toString)
-      spark.stop(); return
-    }
+  // count only the FINAL plan: AdaptiveSparkPlanExec.toString appends
+  // the "== Initial Plan ==" section, which would double every node
+  private def count(plan: String, needle: String): Int =
+    plan.split("== Initial Plan ==")(0)
+      .sliding(needle.length).count(_ == needle)
 
-    // node-count caps: substring presence can't catch "the plan has N of
-    // these where 1 suffices" regressions (e.g. a per-sum window spec
-    // drift exploding one Window into five sorted Windows)
-    val maxOccur: Map[String, Seq[(String, Int)]] = Map(
-      "window_rolling_corr" -> Seq(("Window ", 1), ("Sort ", 2)),
-      "agg_corr_matrix" -> Seq(("FileScan ", 1), ("HashAggregate", 2)),
-      "agg_cov_matrix" -> Seq(("FileScan ", 1), ("HashAggregate", 2)),
-      "agg_grouping_sets" -> Seq(("FileScan ", 1), ("Expand", 1)),
-      // exactly 2 hash shuffles: the uniqueness window over the small
-      // dimension + the final groupBy — the orders fact side reaches
-      // the broadcast join with NO exchange of its own
-      "join_validated" -> Seq(("Exchange hashpartitioning", 2)),
-      "snapshot_diff" -> Seq(("Exchange hashpartitioning", 2)),
-      "agg_weighted_median" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 2)),
-      // exactly ONE hash shuffle: the fold aggregate over the union —
-      // any second exchange means the partial-agg collapse regressed
-      "merge_cdc_apply" -> Seq(("Exchange hashpartitioning", 1)),
-      // ONE keyed exchange for ALL feature streams (backwardMulti: the
-      // k running lasts share a single window over a single union) — a
-      // second exchange means the chained-per-stream form crept back
-      "join_pit_features" -> Seq(("Exchange hashpartitioning", 1),
-        ("Window ", 1), ("Sort ", 2)),
-      // ONE scan of the event log, window + item agg = exactly 2 hash
-      // exchanges — a self-join/as-of formulation would add scans
-      "event_attribution" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 2)),
-      // the two series union into ONE window exchange — a join
-      // formulation would re-key per side
-      "join_merge_ordered" -> Seq(("FileScan ", 2),
-        ("Exchange hashpartitioning", 1)),
-      "sample_kfold" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 1)),
-      // QI-tuple agg + histogram agg: two shuffles, one scan
-      "dq_k_anonymity" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 2)),
-      // one keyed exchange per side of the full-outer join, nothing else
-      "join_combine_first" -> Seq(("Exchange hashpartitioning", 2),
-        ("SortMergeJoin", 1)),
-      // one scan, one keyed exchange, one window
-      "window_rolling_wma" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      // the user_id aggregate reuses the window's partitioning — a
-      // second hash exchange means the reuse regressed
-      "ts_time_weighted_avg" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      // exactly the two DOMAIN distinct aggregates hash-shuffle (tiny
-      // sides); the fact scan feeds the broadcast joins directly, so
-      // the fact side pays zero exchanges
-      "encode_label_factorize" -> Seq(("Exchange hashpartitioning", 2)),
-      "agg_idxmax" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 1)),
-      // one scan, one keyed exchange: the five moments ride one aggregate
-      "agg_group_ols" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 1)),
-      // ONE corpus scan (stats side reuses the per-doc exchange) — a
-      // second FileScan means the tokenize pass stopped being shared.
-      // cap 2 on the exchange STRING: the ReusedExchange node's label
-      // echoes "Exchange hashpartitioning(...)" for the one real shuffle
-      "text_bm25_topk" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 2)),
-      "dq_skew_profile" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 2)),
-      // the token-table layout's whole point: df aggregate + tf-df join
-      // ride the tok bucketing with NO exchange — the only hash shuffle
-      // is the per-doc top-k window
-      "text_tfidf_table" -> Seq(("Exchange hashpartitioning", 1)),
-      // ONE documents scan: the persisted (doc, word) frame serves both
-      // the vocabulary encode and the count join — a second FileScan
-      // means tokenization is being paid twice again
-      "text_token_count_bpe" -> Seq(("FileScan ", 1)),
-      "pack_sequences_bpe" -> Seq(("FileScan ", 1)),
-      // one orders scan + one customer scan: the three metrics' ranks,
-      // the fence aggregate and the scoring join all ride ONE percust
-      // reduce (the r15 ADVICE fix — the old form scanned orders 4x)
-      "seg_rfm" -> Seq(("FileScan ", 2)),
-      // the two-rank tie-average identity keeps all four rank windows
-      // AND the co-moment aggregate on one group exchange — a
-      // per-(group,value) count formulation would add a second
-      "agg_spearman" -> Seq(("FileScan ", 1), ("Exchange hashpartitioning", 1)),
-      // one scan, one keyed exchange, one window carrying all four sums
-      "window_rolling_skew" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      "window_rolling_kurt" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      // the user_id aggregate reuses the lag window's partitioning
-      "window_autocorr" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      // one scan, one keyed exchange — OHLC is a single aggregate
-      "ts_resample_ohlc" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1)),
-      // fence side + fact side each scan customer once; the fence
-      // window and the final segment aggregate are the two exchanges
-      "transform_winsorize" -> Seq(("FileScan ", 2),
-        ("Exchange hashpartitioning", 2)),
-      "encode_quantile_uniform" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      // the whole point: the fact join itself is exchange-free, so the
-      // ONLY hash exchange is the post-join priority aggregate
-      "join_bucketed_facts" -> Seq(("Exchange hashpartitioning", 1)),
-      // one scan, one keyed exchange, one window (rolling-median shape)
-      "window_rolling_quantile" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      // peak/dd/mdd stack over ONE exchange; the dependent second
-      // window pass shares the first's sort (Sort cap 2 = one window
-      // sort + the declared output ORDER BY's range sort, NOT a window
-      // re-sort — Window cap 2 pins the two-pass structure itself)
-      "window_drawdown" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Sort ", 2), ("Window ", 2)),
-      // the gap aggregate reuses the lag window's partitioning
-      "ts_gap_stats" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      "dedup_flag_duplicates" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      // the segment aggregate reuses the rank window's partitioning
-      "agg_gini" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      // the lag-unroll rolling family: all lags share ONE window over
-      // ONE keyed exchange — a second Window means the specs diverged
-      "window_rolling_prod" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      "window_rolling_rank" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      "window_rolling_nunique" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      "window_rolling_idxmax" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      "window_expanding_corr" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 1)),
-      // four weighted prefix sums + the row_number weight share the
-      // mean kernel's single exchange; Window 2 = weight pass + sums
-      "window_ewm_var" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Window ", 2)),
-      // ONE scan, ONE grouped exchange carrying all co-moments
-      "agg_corrwith" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1)),
-      "agg_ab_ttest" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1)),
-      // daily aggregate + lag window = exactly 2 keyed exchanges
-      "ts_dod_change" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 2), ("Window ", 1)),
-      "agg_weighted_mean" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1)),
-      // one keyed exchange for the deque layout + one range exchange
-      // for the declared order — a second hash exchange would mean the
-      // kernel lost its single-layout guarantee
-      "window_rolling_minmax_wide" -> Seq(("FileScan ", 1),
-        ("Exchange hashpartitioning", 1), ("Exchange rangepartitioning", 1)))
-    // count only the FINAL plan: AdaptiveSparkPlanExec.toString appends
-    // the "== Initial Plan ==" section, which would double every node
-    def count(plan: String, needle: String): Int =
-      plan.split("== Initial Plan ==")(0)
-        .sliding(needle.length).count(_ == needle)
-
-    var failed = 0
-    checks.foreach { case (name, mustHave, mustNotHave) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+  checks.foreach { case (name, mustHave, mustNotHave) =>
+    test(name) {
+      val df = SparkEntry.queries(name)(spark, sf)
       df.collect() // materialize THIS plan so AQE finalizes and codegen spans appear
       // simple-mode executed plan: shows the AQE final plan including
       // whole-stage-codegen span markers "*(n)" (FormattedMode omits them)
@@ -1009,15 +986,8 @@ object ExplainAudit {
       val over = maxOccur.getOrElse(name, Seq.empty)
         .filter { case (s, max) => count(plan, s) > max }
         .map { case (s, max) => s"'$s'>${max} (${count(plan, s)})" }
-      if (missing.isEmpty && present.isEmpty && over.isEmpty)
-        println(s"[audit] PASS $name")
-      else {
-        failed += 1
-        println(s"[audit] FAIL $name missing=$missing forbidden-present=$present over=$over")
-      }
+      assert(missing.isEmpty && present.isEmpty && over.isEmpty,
+        s"missing=$missing forbidden-present=$present over=$over\n$plan")
     }
-    println(s"[audit] ${checks.size - failed}/${checks.size} plan checks passed")
-    spark.stop()
-    if (failed > 0) sys.exit(1)
   }
 }

@@ -59,10 +59,6 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("SQL registration via the GraftExtensions function triple") {
-    spark.sessionState.functionRegistry.registerFunction(
-      JaroWinkler.registration._1,
-      JaroWinkler.registration._2,
-      JaroWinkler.registration._3)
     val r = spark.sql("SELECT jaro_winkler('dixon', 'dicksonx')")
       .head().getDouble(0)
     assert(r == 0.8133333333333332)

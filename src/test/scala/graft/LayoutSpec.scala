@@ -45,9 +45,7 @@ class LayoutSpec extends SparkSpec {
       .saveAsTable("b_customer")
     // disable broadcast so the planner actually uses the bucketed
     // layout (at fixture scale it would rather broadcast the dim)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("b_orders")
         .join(spark.table("b_customer"),
           col("o_custkey") === col("c_custkey"))
@@ -57,7 +55,7 @@ class LayoutSpec extends SparkSpec {
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucketed join should not shuffle:\n$plan")
       assert(joined.count() == spark.read.parquet(s"$sf/orders.parquet").count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("hive-partitioned layout prunes partitions at the scan") {

@@ -136,15 +136,11 @@ class MaintenanceSpec extends SparkSpec {
     // bucketing metadata survived: the co-located self-join plans with
     // ZERO exchanges, exactly as on the freshly built table (broadcast
     // disabled so the tiny fixture can't dodge the bucketed-join path)
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val joined = Bucketing.coLocatedJoin(spark, table, table, "tok")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"compaction lost co-location:\n$plan")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
     // the freshness stamp survived the drop-and-rewrite
     assert(graft.tables.FixtureSignature.fresh(spark, table, "9:9"))
@@ -304,15 +300,11 @@ class MaintenanceSpec extends SparkSpec {
     assert(before.length == after.length && before.sameElements(after))
     // composite-key co-location survived: self-join on BOTH bucket
     // columns plans with zero exchanges
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table(table).join(spark.table(table), Seq("k1", "k2"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"lost composite co-location:\n$plan")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
   }

@@ -186,13 +186,12 @@ class NearDupSpec extends SparkSpec {
     val oneShot = NearDup.ngramContainmentPairs(planted, "doc_id", "text",
         n = 3, threshold = 0.9)
       .as[(Long, Long, Double)].collect().toSet
-    spark.conf.set(NearDup.VerifyScratchBytesConf, "1")
-    try {
+    withConf(NearDup.VerifyScratchBytesConf -> "1") {
       val chunked = NearDup.ngramContainmentPairs(planted, "doc_id", "text",
           n = 3, threshold = 0.9)
         .as[(Long, Long, Double)].collect().toSet
       assert(chunked == oneShot && oneShot.nonEmpty)
-    } finally spark.conf.unset(NearDup.VerifyScratchBytesConf)
+    }
   }
 
   test("minhash LSH finds every planted high-jaccard pair") {
@@ -264,8 +263,7 @@ class NearDupSpec extends SparkSpec {
     // the forced block would compare two sharded runs (vacuous)
     val mhDefault = NearDup.minHashLshPairs(planted, "doc_id", "text", threshold = 0.5)
       .select("a", "b", "jaccard").as[(Long, Long, Double)].collect().toMap2
-    spark.conf.set(NearDup.BroadcastPrefixBytesConf, "0")
-    try {
+    withConf(NearDup.BroadcastPrefixBytesConf -> "0") {
       val sharded = NearDup.ngramJaccardPairs(planted, "doc_id", "text", threshold = 0.5)
       val got = sharded.select("a", "b", "jaccard")
         .as[(Long, Long, Double)].collect().toMap2
@@ -279,7 +277,7 @@ class NearDupSpec extends SparkSpec {
       val mhSharded = NearDup.minHashLshPairs(planted, "doc_id", "text", threshold = 0.5)
         .select("a", "b", "jaccard").as[(Long, Long, Double)].collect().toMap2
       assert(mhSharded == mhDefault)
-    } finally spark.conf.unset(NearDup.BroadcastPrefixBytesConf)
+    }
   }
 
   test("cross-corpus ngram join finds every planted pair, cross-side only") {

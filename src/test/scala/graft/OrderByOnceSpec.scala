@@ -10,7 +10,7 @@ import graft.operators.OrderByOnce.Ops
   * after the consuming action (the CacheLifecycle discipline — a
   * long-lived session running the window family hundreds of times must
   * not accumulate pinned blocks); (3) the child plan stays visible
-  * through the cache (the property ExplainAudit's scan/window pins
+  * through the cache (the property ExplainAuditSpec's scan/window pins
   * rely on — a checkpoint-style barrier would hide it).
   */
 class OrderByOnceSpec extends SparkSpec {
@@ -47,7 +47,7 @@ class OrderByOnceSpec extends SparkSpec {
         org.apache.spark.sql.execution.FormattedMode)
     assert(plan.contains("InMemoryRelation"), plan.take(800))
     // the scan and the pushed filter of the CHILD must still print —
-    // the pin surface ExplainAudit checks
+    // the pin surface ExplainAuditSpec checks
     assert(plan.contains("Scan parquet"), plan.take(800))
     assert(plan.contains("PushedFilters"), plan.take(800))
   }

@@ -4,19 +4,33 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — specs
-  * run in a single forked JVM, so getOrCreate dedupes).
+  * run in a single forked JVM, so getOrCreate dedupes). It is the
+  * session the library ships, [[GraftSession]], with only the test
+  * harness settings on top.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `pairs` set on the shared session, then restores
+    * each key to its previous value (or unsets it), so no spec leaks
+    * config into the specs that run after it.
+    */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -55,10 +55,6 @@ class VectorDotSpec extends SparkSpec {
   }
 
   test("SQL registration via the GraftExtensions function triple") {
-    spark.sessionState.functionRegistry.registerFunction(
-      VectorDotScaled.registration._1,
-      VectorDotScaled.registration._2,
-      VectorDotScaled.registration._3)
     emb.createOrReplaceTempView("emb_sql")
     val viaSql = spark.sql(
       """SELECT sum(vector_dot_scaled(embedding, embedding)) FROM emb_sql""")
